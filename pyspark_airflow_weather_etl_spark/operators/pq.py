@@ -49,6 +49,13 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .retrieval import (
+    _batches_disjoint,
+    _drop_batch_dirs,
+    _drop_manifest_row,
+    _write_batch_keyed,
+)
+
 SEED = 42
 
 
@@ -271,11 +278,11 @@ def ivfpq_index_write(
         if rotation is None
         else opq_encode(assigned, rotation, codebooks, vec_col)
     )
-    (
-        coded.select(id_col, "pq_code", vec_col, "ivf_cell")
-        .write.mode("overwrite")
-        .partitionBy("ivf_cell")
-        .parquet(path)
+    _write_batch_keyed(
+        coded.select(id_col, "pq_code", vec_col, "ivf_cell"),
+        path,
+        ("ivf_cell",),
+        replace_tree=True,
     )
 
 
@@ -945,11 +952,6 @@ def ivfpq_index_append(
     Returns ``{"batch", "n_rows", "mean_qerr", "drift_ratio"}``."""
     from pyspark.errors import AnalysisException
 
-    from .retrieval import (
-        _drop_batch_dirs,
-        _drop_manifest_row,
-        _write_batch_keyed,
-    )
     from .similarity import _manifest_from_agg, ivf_assign, ivf_train_centroids
 
     spark = embeddings.sparkSession
@@ -1148,8 +1150,6 @@ def ivfpq_index_topk(
     ranking depends only on the re-ranked exact vector — ADC fold
     choice affects candidate selection (recall), never the returned
     distances."""
-    from .retrieval import _batches_disjoint
-
     meta = spark.read.parquet(f"{index_path}/meta").collect()[0]
     m, n_codes = int(meta["m"]), int(meta["n_codes"])
     opq = bool(meta["opq"]) if "opq" in meta.__fields__ else False
@@ -1277,7 +1277,7 @@ def ivfpq_index_compact(spark, src_path: str, dst_path: str) -> str:
             if "array" in f.dataType.simpleString()
             and f.name != "pq_code"
         ][0]
-        (
+        _write_batch_keyed(
             rows.groupBy(id_col)
             .agg(
                 F.max_by(
@@ -1292,10 +1292,9 @@ def ivfpq_index_compact(spark, src_path: str, dst_path: str) -> str:
                 F.col("w.qerr").alias("qerr"),
                 F.lit(0).cast("bigint").alias("batch"),
                 F.col("w.ivf_cell").alias("ivf_cell"),
-            )
-            .write.mode("overwrite")
-            .partitionBy("batch", "ivf_cell")
-            .parquet(f"{vdir}/rows")
+            ),
+            f"{vdir}/rows",
+            ("batch", "ivf_cell"),
         )
         folded = spark.read.parquet(f"{vdir}/rows")
         st = folded.agg(
@@ -1308,30 +1307,28 @@ def ivfpq_index_compact(spark, src_path: str, dst_path: str) -> str:
         mq = float(st["mean_qerr"] or 0.0)
         # folded batch-0 drift row so post-compaction appends keep
         # the drift protocol working (the ivf_index_compact shape)
-        spark.createDataFrame(
-            [(0, int(st["n_rows"]), mq, mq / fit if fit > 0 else 1.0)],
-            "batch bigint, n_rows bigint, mean_qerr double,"
-            " drift_ratio double",
-        ).write.mode("overwrite").partitionBy("batch").parquet(
-            f"{vdir}/drift"
+        _write_batch_keyed(
+            spark.createDataFrame(
+                [(0, int(st["n_rows"]), mq, mq / fit if fit > 0 else 1.0)],
+                "batch bigint, n_rows bigint, mean_qerr double,"
+                " drift_ratio double",
+            ),
+            f"{vdir}/drift",
+            ("batch",),
         )
         # agg-then-withColumn (the _sq8_write_manifest discipline):
         # a positional tuple would misalign against the read-back
         # schema's trailing batch partition column
-        spark.createDataFrame(
-            [
-                (
-                    st["min_id"],
-                    st["max_id"],
-                    int(st["n_rows"]),
-                )
-            ],
-            f"min_id {folded.schema[id_col].dataType.simpleString()},"
-            f" max_id {folded.schema[id_col].dataType.simpleString()},"
-            " n_rows bigint",
-        ).withColumn("batch", F.lit(0).cast("bigint")).write.mode(
-            "overwrite"
-        ).partitionBy("batch").parquet(f"{vdir}/rows_manifest")
+        _write_batch_keyed(
+            spark.createDataFrame(
+                [(st["min_id"], st["max_id"], int(st["n_rows"]))],
+                f"min_id {folded.schema[id_col].dataType.simpleString()},"
+                f" max_id {folded.schema[id_col].dataType.simpleString()},"
+                " n_rows bigint",
+            ).withColumn("batch", F.lit(0).cast("bigint")),
+            f"{vdir}/rows_manifest",
+            ("batch",),
+        )
 
     return publish_version(spark, dst_path, build)
 

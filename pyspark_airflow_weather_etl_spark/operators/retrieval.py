@@ -39,7 +39,7 @@ from __future__ import annotations
 
 import hashlib
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Row, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..caching import claim_group, persist_into
@@ -50,6 +50,13 @@ from .text import tokens
 #: md5(token) → 256 partitions, enough spread for any vocabulary while
 #: keeping the probe's IN-list tiny.
 _PFX_LEN = 2
+
+#: read schema of the doc-id ``manifest`` the BM25 and positional
+#: appends and compactions write — bigint by construction, so reads
+#: pass it and skip the one-task schema-inference job.
+_DOC_MANIFEST = (
+    "min_doc_id bigint, max_doc_id bigint, n_docs bigint, batch bigint"
+)
 
 
 class OverlappingBatchesError(RuntimeError):
@@ -101,14 +108,7 @@ def _bm25_overlap_guard(
         return
     # _batches_disjoint short-circuits True on <=1 live batches, so no
     # separate _n_batches pre-check (one listStatus, not two)
-    if _batches_disjoint(
-        spark,
-        f"{index_path}/postings",
-        f"{index_path}/manifest",
-        "min_doc_id",
-        "max_doc_id",
-        "n_docs",
-    ):
+    if _doc_batches_disjoint(spark, index_path, "postings"):
         return
     msg = (
         f"BM25 index at {index_path} has multiple batches whose"
@@ -330,28 +330,43 @@ def bm25_hard_negatives(
     return _rank_topk(neg, k)
 
 
-def _write_batch_keyed(df: DataFrame, out_path: str, partition_cols) -> None:
-    """Dynamic partition overwrite — replaces exactly the partitions
-    being written, so a crashed-and-replayed (or outright duplicated)
-    append of the same batch lands the identical bytes (the
-    streaming/lm_monitor batch-keyed idiom)."""
-    spark = df.sparkSession
-    old = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            df.write.mode("overwrite")
-            .partitionBy(*partition_cols)
-            .parquet(out_path)
+def _write_batch_keyed(
+    df: DataFrame, out_path: str, partition_cols, replace_tree: bool = False
+) -> None:
+    """The one writer of every at-rest index tree.
+
+    Rows are rebalanced on the tree's partition columns when the
+    layout has a level below ``batch`` (``pfx``, ``dpfx``,
+    ``ivf_cell``, ``t/bucket``). Without it every upstream task writes
+    its own file into every leaf it holds rows for — from four
+    upstream tasks, one 100-document BM25 append landed 125 postings
+    files in 32 ``pfx=`` leaves. Hashing on the partition columns
+    routes each leaf's rows to one task, so a fixture-scale write
+    lands one file per leaf. It is AQE's rebalance, not a ``coalesce``
+    or a fixed ``repartition(n)``: small partitions merge and skewed
+    ones split to the advisory size, so files stay size-bounded at
+    100 TB. ``batch``-only trees (manifests, stats, drift rows, SQ8
+    rows) hold one leaf per write and stay unshuffled — the exchange
+    would be a pure extra job.
+
+    Dynamic partition overwrite (the default) replaces exactly the
+    partitions being written, so a crashed-and-replayed (or outright
+    duplicated) append of the same batch lands the identical bytes
+    (the streaming/lm_monitor batch-keyed idiom). ``replace_tree``
+    is the one-shot build: the whole tree under ``out_path`` is
+    replaced, so a rebuild with fewer cells leaves no stale leaf. The
+    mode is a writer option, never a session conf flip, so a shared
+    session's conf is never touched mid-write."""
+    if any(c != "batch" for c in partition_cols):
+        df = df.hint("rebalance", *partition_cols)
+    (
+        df.write.mode("overwrite")
+        .option(
+            "partitionOverwriteMode", "static" if replace_tree else "dynamic"
         )
-    finally:
-        if old is not None:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", old)
-        else:
-            # the key was unset before; leaving it set to dynamic would
-            # silently change later overwrite-partitionBy writes from
-            # full-tree replace to partial overwrite
-            spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+        .partitionBy(*partition_cols)
+        .parquet(out_path)
+    )
 
 
 def bm25_index_append(
@@ -474,40 +489,23 @@ def bm25_index_append(
             f"{path}/docterms",
             ("batch", "dpfx"),
         )
-    mm = tok.agg(
-        F.min(F.col("doc_id").cast("bigint")).alias("min_doc_id"),
-        F.max(F.col("doc_id").cast("bigint")).alias("max_doc_id"),
-        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-    ).collect()[0]
+    mm = _doc_range(tok)
     for c in caches:
         c.unpersist()
-    lo = int(mm["min_doc_id"]) if mm["n_docs"] else 0
-    hi = int(mm["max_doc_id"]) if mm["n_docs"] else -1
-    from pyspark.errors import AnalysisException
-
     spark = docs.sparkSession
-    maybe_overlap = False
-    try:
-        others = [
-            r
-            for r in spark.read.parquet(f"{path}/manifest").collect()
-            if int(r["batch"]) != int(batch_id) and int(r["n_docs"]) > 0
-        ]
-        maybe_overlap = mm["n_docs"] > 0 and any(
-            lo <= int(r["max_doc_id"]) and int(r["min_doc_id"]) <= hi
-            for r in others
-        )
-    except AnalysisException:
-        pass  # first append / pre-manifest tree
-    _write_batch_keyed(
-        spark.createDataFrame(
-            [(int(batch_id), lo, hi, int(mm["n_docs"]))],
-            "batch bigint, min_doc_id bigint, max_doc_id bigint,"
-            " n_docs bigint",
-        ),
-        f"{path}/manifest",
-        ("batch",),
+    # None on the first append / a pre-manifest tree
+    others = [
+        r
+        for r in _metadata_rows(spark, f"{path}/manifest", _DOC_MANIFEST)
+        or []
+        if int(r["batch"]) != int(batch_id) and int(r["n_docs"]) > 0
+    ]
+    maybe_overlap = mm["n_docs"] > 0 and any(
+        mm["min_doc_id"] <= int(r["max_doc_id"])
+        and int(r["min_doc_id"]) <= mm["max_doc_id"]
+        for r in others
     )
+    _write_doc_manifest(spark, f"{path}/manifest", batch_id, mm)
     return {
         "batch": int(batch_id),
         "n_docs": int(mm["n_docs"]),
@@ -722,6 +720,17 @@ def bm25_prf_expand_at_rest(
     return _rank_topk(total, k)
 
 
+def _empty_matches(
+    docs: DataFrame, id_col: str, key: str, count: str
+) -> DataFrame:
+    """The empty ``(key, doc_id, count)`` result of a match query
+    given no queries — ``doc_id`` keeps the corpus id's type."""
+    id_type = docs.schema[id_col].dataType.simpleString()
+    return docs.sparkSession.createDataFrame(
+        [], f"{key} bigint, doc_id {id_type}, {count} bigint"
+    )
+
+
 def phrase_counts(
     docs: DataFrame,
     phrases: list[tuple[int, str]],
@@ -758,10 +767,9 @@ def phrase_counts(
     if not phrases:
         # ADVICE r16: an empty phrase list would build
         # map_from_arrays(array(), array()) — VOID-typed, fails
-        # analysis. Pre-r16 behavior: an empty result frame.
-        return spark.createDataFrame(
-            [], "phrase_id bigint, doc_id bigint, n_matches bigint"
-        )
+        # analysis. Pre-r16 behavior: an empty result frame, doc_id
+        # typed like the corpus id as on the non-empty path.
+        return _empty_matches(docs, id_col, "phrase_id", "n_matches")
     # split(" ") never returns an empty array (an empty string
     # tokenizes to [""]), so every phrase has a leading token
     firsts = sorted({q.split(" ")[0] for _, q in phrases})
@@ -855,27 +863,7 @@ def positional_index_append(
     _drop_manifest_row(spark, f"{path}/manifest", batch_id)
     _drop_batch_dirs(spark, batch_id, f"{path}/postings_pos")
     _write_batch_keyed(posted, f"{path}/postings_pos", ("batch", "pfx"))
-    mm = t.agg(
-        F.min(F.col("doc_id").cast("bigint")).alias("min_doc_id"),
-        F.max(F.col("doc_id").cast("bigint")).alias("max_doc_id"),
-        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-    ).collect()[0]
-    _write_batch_keyed(
-        spark.createDataFrame(
-            [
-                (
-                    int(batch_id),
-                    int(mm["min_doc_id"]) if mm["n_docs"] else 0,
-                    int(mm["max_doc_id"]) if mm["n_docs"] else -1,
-                    int(mm["n_docs"]),
-                )
-            ],
-            "batch bigint, min_doc_id bigint, max_doc_id bigint,"
-            " n_docs bigint",
-        ),
-        f"{path}/manifest",
-        ("batch",),
-    )
+    _write_doc_manifest(spark, f"{path}/manifest", batch_id, _doc_range(t))
 
 
 def positional_index_write(
@@ -906,8 +894,11 @@ def positional_index_compact(
     ``phrase_at_rest_16deltas`` / ``_compacted`` pair prices).
     Positions are per-document facts — there are no cross-batch
     statistics to re-sum — so compaction is a pure re-partition of
-    the postings under ``batch=0``, one well-sized file set per pfx;
-    probe results are bit-identical by construction (the catalog's
+    the postings under ``batch=0``. The write is rebalanced on
+    (batch, pfx) (:func:`_write_batch_keyed`): each pfx leaf's rows go
+    to one task, so a leaf holds one file until it outgrows AQE's
+    advisory partition size, then splits into files of about that
+    size; probe results are bit-identical by construction (the catalog's
     ``phrase_match_compacted`` shares the ad-hoc phrase oracle).
 
     Crash contract is :func:`..sources.writers.publish_version`: the
@@ -923,7 +914,7 @@ def positional_index_compact(
             "token string, doc_id bigint, pos bigint, batch bigint,"
             " pfx string"
         ).parquet(f"{src_path}/postings_pos")
-        (
+        _write_batch_keyed(
             src.select(
                 "token",
                 "doc_id",
@@ -937,34 +928,14 @@ def positional_index_compact(
             # skip trusts to be duplicate-free — and positions are
             # per-document facts, so the distinct is semantics-
             # restoring, paid once at compaction instead of per probe
-            .dropDuplicates(["token", "doc_id", "pos"])
-            .write.mode("overwrite")
-            .partitionBy("batch", "pfx")
-            .parquet(f"{vdir}/postings_pos")
+            .dropDuplicates(["token", "doc_id", "pos"]),
+            f"{vdir}/postings_pos",
+            ("batch", "pfx"),
         )
         # fresh batch-0 manifest so appends AFTER this compaction can
         # still prove disjointness against the folded history
-        mm = src.agg(
-            F.min("doc_id").alias("min_doc_id"),
-            F.max("doc_id").alias("max_doc_id"),
-            F.count_distinct(F.col("doc_id")).cast("bigint").alias("n_docs"),
-        ).collect()[0]
-        (
-            spark.createDataFrame(
-                [
-                    (
-                        0,
-                        int(mm["min_doc_id"]) if mm["n_docs"] else 0,
-                        int(mm["max_doc_id"]) if mm["n_docs"] else -1,
-                        int(mm["n_docs"]),
-                    )
-                ],
-                "batch bigint, min_doc_id bigint, max_doc_id bigint,"
-                " n_docs bigint",
-            )
-            .write.mode("overwrite")
-            .partitionBy("batch")
-            .parquet(f"{vdir}/manifest")
+        _write_doc_manifest(
+            spark, f"{vdir}/manifest", 0, _compacted_range(src)
         )
 
     return publish_version(spark, dst_path, build)
@@ -1005,6 +976,7 @@ def _batches_disjoint(
     min_col: str,
     max_col: str,
     n_col: str,
+    schema: str | None = None,
 ) -> bool:
     """Whether a batch-keyed delta tree's per-batch id ranges are
     PAIRWISE DISJOINT according to its manifest — the proof that no
@@ -1016,15 +988,13 @@ def _batches_disjoint(
     lexicographically) — a shared id sits inside both batches' ranges
     under any total order, so disjoint ranges exclude it either way.
     Driver cost is one listStatus plus a batches-sized parquet
-    read."""
-    from pyspark.errors import AnalysisException
-
+    read; ``schema`` is the manifest's read schema where the writer
+    fixes it (see :func:`_metadata_rows`)."""
     live = _batch_ids(spark, tree_path)
     if len(live) <= 1:
         return True
-    try:
-        rows = spark.read.parquet(manifest_path).collect()
-    except AnalysisException:
+    rows = _metadata_rows(spark, manifest_path, schema)
+    if rows is None:
         return False
     by_batch = {int(r["batch"]): r for r in rows}
     if not set(live) <= set(by_batch):
@@ -1036,6 +1006,83 @@ def _batches_disjoint(
     )
     return all(
         ranges[i][0] > ranges[i - 1][1] for i in range(1, len(ranges))
+    )
+
+
+def _doc_batches_disjoint(
+    spark: SparkSession, index_path: str, tree: str
+) -> bool:
+    """:func:`_batches_disjoint` of a BM25 or positional ``tree``
+    against the index's doc-id ``manifest``."""
+    return _batches_disjoint(
+        spark,
+        f"{index_path}/{tree}",
+        f"{index_path}/manifest",
+        "min_doc_id",
+        "max_doc_id",
+        "n_docs",
+        _DOC_MANIFEST,
+    )
+
+
+def _metadata_rows(
+    spark: SparkSession, path: str, schema: str | None = None
+) -> list[Row] | None:
+    """The rows of a small index metadata tree (a batch manifest, a
+    quantizer ``meta``), or None when the tree is missing or holds no
+    rows. Pass ``schema`` where the writer fixes the types
+    (:data:`_DOC_MANIFEST`, the SQ8 ``meta``): an unschema'd read runs
+    a one-task schema-inference job first. Vector manifests keep the
+    inferred read — their id range has the caller's id type."""
+    from pyspark.errors import AnalysisException
+
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    try:
+        return reader.parquet(path).collect() or None
+    except AnalysisException:
+        return None
+
+
+def _doc_range(t: DataFrame) -> Row:
+    """Doc-id range of one appended batch (``t``: one row per
+    document, a ``doc_id`` column) — the manifest row's inputs."""
+    return t.agg(
+        F.min(F.col("doc_id").cast("bigint")).alias("min_doc_id"),
+        F.max(F.col("doc_id").cast("bigint")).alias("max_doc_id"),
+        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+    ).collect()[0]
+
+
+def _compacted_range(postings: DataFrame) -> Row:
+    """Doc-id range of a compacted tree's postings (several rows per
+    document, so ``n_docs`` counts distinct ids)."""
+    return postings.agg(
+        F.min("doc_id").alias("min_doc_id"),
+        F.max("doc_id").alias("max_doc_id"),
+        F.count_distinct(F.col("doc_id")).cast("bigint").alias("n_docs"),
+    ).collect()[0]
+
+
+def _write_doc_manifest(
+    spark: SparkSession, manifest_path: str, batch_id: int, mm: Row
+) -> None:
+    """Land one batch's doc-id manifest row from ``mm`` (min_doc_id,
+    max_doc_id, n_docs); an empty batch records the range (0, -1)."""
+    n = int(mm["n_docs"])
+    _write_batch_keyed(
+        spark.createDataFrame(
+            [
+                (
+                    int(mm["min_doc_id"]) if n else 0,
+                    int(mm["max_doc_id"]) if n else -1,
+                    n,
+                    int(batch_id),
+                )
+            ],
+            _DOC_MANIFEST,
+        ),
+        manifest_path,
+        ("batch",),
     )
 
 
@@ -1129,18 +1176,10 @@ def _require_docterms_coverage(spark: SparkSession, index_path: str) -> None:
     subtree; live = manifest batches with ``n_docs > 0`` when a
     manifest exists (a zero-doc batch legitimately has no docterms
     dir), else every postings batch dir."""
-    from pyspark.errors import AnalysisException
-
     live = set(_batch_ids(spark, f"{index_path}/postings"))
-    if _manifest_exists(spark, f"{index_path}/manifest"):
-        try:
-            rows = spark.read.parquet(f"{index_path}/manifest").collect()
-            nonempty = {
-                int(r["batch"]) for r in rows if int(r["n_docs"]) > 0
-            }
-            live &= nonempty
-        except AnalysisException:
-            pass
+    rows = _metadata_rows(spark, f"{index_path}/manifest", _DOC_MANIFEST)
+    if rows is not None:
+        live &= {int(r["batch"]) for r in rows if int(r["n_docs"]) > 0}
     covered = (
         set(_batch_ids(spark, f"{index_path}/docterms"))
         if _manifest_exists(spark, f"{index_path}/docterms")
@@ -1165,14 +1204,7 @@ def _pos_dedup_needed(spark: SparkSession, index_path: str) -> bool:
     doc-id ranges are pairwise disjoint (:func:`_batches_disjoint` —
     duplicates require the same doc_id under two batches, which
     disjoint ranges exclude)."""
-    return not _batches_disjoint(
-        spark,
-        f"{index_path}/postings_pos",
-        f"{index_path}/manifest",
-        "min_doc_id",
-        "max_doc_id",
-        "n_docs",
-    )
+    return not _doc_batches_disjoint(spark, index_path, "postings_pos")
 
 
 def phrase_match_at_rest(
@@ -1328,14 +1360,11 @@ def proximity_counts(
     every pair's aggregate runs exactly once per document and the
     join disappears outright (plan-pinned in tests/test_plan_shapes).
     Position arrays are doc-local; nothing shuffles but the result."""
-    spark = docs.sparkSession
     if not pairs:
         # ADVICE r16: mirrors the phrase_counts empty-input guard —
         # an empty pair list would fail analysis on the VOID-typed
         # empty map; pre-r16 behavior was an empty result frame.
-        return spark.createDataFrame(
-            [], "pair_id bigint, doc_id bigint, n_pairs bigint"
-        )
+        return _empty_matches(docs, id_col, "pair_id", "n_pairs")
     all_terms = sorted({t for _, a, b in pairs for t in (a, b)})
 
     def _positions_of(term: str):
@@ -1860,10 +1889,14 @@ def bm25_index_compact(
     thousands-of-rows-per-term stats deltas on every query. Compaction
     pays the rewrite ONCE, off the serving path: postings rows are
     already unique across batches (disjoint documents), so the data
-    tree re-partitions under ``batch=0`` (one well-sized file set per
-    pfx), term stats collapse to their sums, and the corpus scalars to
-    one row. Probe results are BIT-IDENTICAL by construction (sums of
-    sums; the catalog entry shares the ad-hoc oracle).
+    tree re-partitions under ``batch=0``, term stats collapse to their
+    sums, and the corpus scalars to one row. The postings and docterms
+    writes are rebalanced on their partition columns
+    (:func:`_write_batch_keyed`): each pfx/dpfx leaf's rows go to one
+    task, so a leaf holds one file until it outgrows AQE's advisory
+    partition size, then splits into files of about that size. Probe
+    results are BIT-IDENTICAL by construction (sums of sums; the
+    catalog entry shares the ad-hoc oracle).
 
     Crash contract is :func:`..sources.writers.publish_version`: the
     compacted tree builds inside an unreferenced ``v-<n>`` dir, the
@@ -1911,14 +1944,7 @@ def bm25_index_compact(
         raise ValueError(f"unknown repair {repair!r}")
     do_repair = repair == "always" or (
         repair == "auto"
-        and not _batches_disjoint(
-            spark,
-            f"{src_path}/postings",
-            f"{src_path}/manifest",
-            "min_doc_id",
-            "max_doc_id",
-            "n_docs",
-        )
+        and not _doc_batches_disjoint(spark, src_path, "postings")
         # pre-manifest trees keep the historical additive fold: with
         # no manifest at all there is no overlap REPORT to act on
         and _manifest_exists(spark, f"{src_path}/manifest")
@@ -1951,50 +1977,34 @@ def bm25_index_compact(
                 F.lit(0).cast("bigint").alias("batch"),
                 "pfx",
             )
-        (
-            postings.write.mode("overwrite")
-            .partitionBy("batch", "pfx")
-            .parquet(f"{vdir}/postings")
-        )
+        _write_batch_keyed(postings, f"{vdir}/postings", ("batch", "pfx"))
+        batch0 = F.lit(0).cast("bigint").alias("batch")
+        folded = spark.read.schema(
+            "token string, doc_id bigint, tf bigint, dl bigint,"
+            " batch bigint, pfx string"
+        ).parquet(f"{vdir}/postings")
         if do_repair:
             # statistics recomputed from the FOLDED postings — the
             # additive deltas still contain the superseded docs
-            folded = spark.read.schema(
-                "token string, doc_id bigint, tf bigint, dl bigint,"
-                " batch bigint, pfx string"
-            ).parquet(f"{vdir}/postings")
-            (
-                folded.groupBy("token")
-                .agg(F.count(F.lit(1)).cast("bigint").alias("df"))
-                .withColumn("batch", F.lit(0).cast("bigint"))
-                .write.mode("overwrite")
-                .partitionBy("batch")
-                .parquet(f"{vdir}/termstats")
+            termstats = folded.groupBy("token").agg(
+                F.count(F.lit(1)).cast("bigint").alias("df")
             )
-            (
+            stats = (
                 folded.groupBy("doc_id")
                 .agg(F.first("dl").alias("dl"))
                 .agg(
                     F.count(F.lit(1)).cast("bigint").alias("n_docs"),
                     F.sum("dl").cast("bigint").alias("sum_dl"),
                 )
-                .withColumn("batch", F.lit(0).cast("bigint"))
-                .write.mode("overwrite")
-                .partitionBy("batch")
-                .parquet(f"{vdir}/stats")
             )
         else:
-            (
+            termstats = (
                 spark.read.schema("token string, df bigint, batch bigint")
                 .parquet(f"{src_path}/termstats")
                 .groupBy("token")
                 .agg(F.sum("df").cast("bigint").alias("df"))
-                .withColumn("batch", F.lit(0).cast("bigint"))
-                .write.mode("overwrite")
-                .partitionBy("batch")
-                .parquet(f"{vdir}/termstats")
             )
-            (
+            stats = (
                 spark.read.schema(
                     "n_docs bigint, sum_dl bigint, batch bigint"
                 )
@@ -2003,11 +2013,13 @@ def bm25_index_compact(
                     F.sum("n_docs").cast("bigint").alias("n_docs"),
                     F.sum("sum_dl").cast("bigint").alias("sum_dl"),
                 )
-                .withColumn("batch", F.lit(0).cast("bigint"))
-                .write.mode("overwrite")
-                .partitionBy("batch")
-                .parquet(f"{vdir}/stats")
             )
+        _write_batch_keyed(
+            termstats.select("*", batch0), f"{vdir}/termstats", ("batch",)
+        )
+        _write_batch_keyed(
+            stats.select("*", batch0), f"{vdir}/stats", ("batch",)
+        )
         if forward_index:
             dterms = spark.read.schema(
                 "doc_id bigint, token string, batch bigint, dpfx string"
@@ -2017,50 +2029,15 @@ def bm25_index_compact(
                     F.max("batch").alias("batch")
                 )
                 dterms = dterms.join(dlatest, ["doc_id", "batch"])
-            (
-                dterms.select(
-                    "doc_id",
-                    "token",
-                    F.lit(0).cast("bigint").alias("batch"),
-                    "dpfx",
-                )
-                .write.mode("overwrite")
-                .partitionBy("batch", "dpfx")
-                .parquet(f"{vdir}/docterms")
+            _write_batch_keyed(
+                dterms.select("doc_id", "token", batch0, "dpfx"),
+                f"{vdir}/docterms",
+                ("batch", "dpfx"),
             )
         # fresh batch-0 manifest (from the written postings) so
         # post-compaction appends keep the overlap protocol working
-        mm = (
-            spark.read.schema(
-                "token string, doc_id bigint, tf bigint, dl bigint,"
-                " batch bigint, pfx string"
-            )
-            .parquet(f"{vdir}/postings")
-            .agg(
-                F.min("doc_id").alias("min_doc_id"),
-                F.max("doc_id").alias("max_doc_id"),
-                F.count_distinct(F.col("doc_id"))
-                .cast("bigint")
-                .alias("n_docs"),
-            )
-            .collect()[0]
-        )
-        (
-            spark.createDataFrame(
-                [
-                    (
-                        0,
-                        int(mm["min_doc_id"]) if mm["n_docs"] else 0,
-                        int(mm["max_doc_id"]) if mm["n_docs"] else -1,
-                        int(mm["n_docs"]),
-                    )
-                ],
-                "batch bigint, min_doc_id bigint, max_doc_id bigint,"
-                " n_docs bigint",
-            )
-            .write.mode("overwrite")
-            .partitionBy("batch")
-            .parquet(f"{vdir}/manifest")
+        _write_doc_manifest(
+            spark, f"{vdir}/manifest", 0, _compacted_range(folded)
         )
 
     return publish_version(spark, dst_path, build)

@@ -27,6 +27,13 @@ from pyspark.sql import functions as F
 
 from ..caching import claim_group, persist_into
 from ..functions.vectors import cosine_similarity, dot, l2_norm, pair_dot_arrow
+from .retrieval import (
+    _batches_disjoint,
+    _drop_batch_dirs,
+    _drop_manifest_row,
+    _metadata_rows,
+    _write_batch_keyed,
+)
 
 SEED = 42
 
@@ -142,6 +149,28 @@ def _sq8_codes(vec_col: str, mn: list[float], sc: list[float]) -> F.Column:
     )
 
 
+#: the SQ8 quantizer ``meta`` every SQ8 build writes; reads pass it,
+#: so no schema-inference job runs per append or probe
+_SQ8_META = "mn array<double>, sc array<double>"
+
+
+def _sq8_meta(
+    spark, index_path: str, missing_ok: bool = False
+) -> tuple[list[float], list[float]] | None:
+    """The frozen per-dimension (min, scale) of an SQ8 index. A tree
+    without ``meta`` raises FileNotFoundError, or gives None with
+    ``missing_ok``."""
+    rows = _metadata_rows(spark, f"{index_path}/meta", _SQ8_META)
+    if rows is None:
+        if missing_ok:
+            return None
+        raise FileNotFoundError(f"no SQ8 quantizer meta under {index_path}")
+    return (
+        [float(v) for v in rows[0]["mn"]],
+        [float(v) for v in rows[0]["sc"]],
+    )
+
+
 def _sq8_unclamped(vec_col: str, mn: list[float], sc: list[float]) -> F.Column:
     """The quantizer WITHOUT the [0,255] clamp — the drift guard's
     view: values outside the frozen per-dimension range quantize to
@@ -199,25 +228,30 @@ def sq8_index_append(
     from pyspark.errors import AnalysisException
 
     spark = embeddings.sparkSession
+    params = _sq8_meta(spark, path, missing_ok=True)
     try:
-        meta = spark.read.parquet(f"{path}/meta").collect()[0]
-        mn = [float(v) for v in meta["mn"]]
-        sc = [float(v) for v in meta["sc"]]
         # normalize the incoming batch to the index's stored column
         # types (one footer read): a crawl feed that switches float →
         # double mid-stream would otherwise write a mixed-type parquet
         # tree that FAILS at probe time with a column-convert error
-        stored = spark.read.parquet(f"{path}/rows").schema
+        stored = params and spark.read.parquet(f"{path}/rows").schema
+    except AnalysisException:
+        stored = None
+    if stored is not None:
+        mn, sc = params
         embeddings = embeddings.select(
             F.col(id_col).cast(stored[id_col].dataType),
             F.col(vec_col).cast(stored[vec_col].dataType),
         )
-    except AnalysisException:
+    else:
         d = len(embeddings.select(vec_col).first()[0])
         mn, sc = _sq8_params(embeddings, d, vec_col)
-        spark.createDataFrame(
-            [(mn, sc)], "mn array<double>, sc array<double>"
-        ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
+        (
+            spark.createDataFrame([(mn, sc)], _SQ8_META)
+            .coalesce(1)
+            .write.mode("overwrite")
+            .parquet(f"{path}/meta")
+        )
     raw = _sq8_unclamped(vec_col, mn, sc)
     guard = embeddings.agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -226,12 +260,6 @@ def sq8_index_append(
             F.size(F.filter(raw, lambda c: (c < 0) | (c > 255)))
         ).alias("n_clamped"),
     ).collect()[0]
-    from .retrieval import (
-        _drop_batch_dirs,
-        _drop_manifest_row,
-        _write_batch_keyed,
-    )
-
     # fail-closed replay: manifest row first, then the batch dir —
     # also covers the empty-re-delivery edge (a zero-row dynamic
     # overwrite replaces nothing)
@@ -275,8 +303,6 @@ def sq8_index_append(
     # append-only drift log — sq8_drift_report's per-batch history for
     # batch AND streaming pipelines alike (batch-keyed dynamic
     # overwrite keeps a replayed batch from double-logging)
-    from .retrieval import _write_batch_keyed
-
     _write_batch_keyed(
         spark.createDataFrame(
             [
@@ -344,9 +370,7 @@ def sq8_drift_report(
 
     if live not in ("full", "sample", "off"):
         raise ValueError(f"unknown live mode {live!r}")
-    meta = spark.read.parquet(f"{index_path}/meta").collect()[0]
-    mn = [float(v) for v in meta["mn"]]
-    sc = [float(v) for v in meta["sc"]]
+    mn, sc = _sq8_meta(spark, index_path)
     try:
         log = [
             r.asDict()
@@ -412,11 +436,7 @@ def sq8_drift_backfill(spark, index_path: str) -> int:
     overwrites each batch's row with identical bytes). After this,
     ``sq8_drift_report(live='off')`` decides from the log alone.
     Returns the number of batch rows written."""
-    from .retrieval import _write_batch_keyed
-
-    meta = spark.read.parquet(f"{index_path}/meta").collect()[0]
-    mn = [float(v) for v in meta["mn"]]
-    sc = [float(v) for v in meta["sc"]]
+    mn, sc = _sq8_meta(spark, index_path)
     rows = spark.read.parquet(f"{index_path}/rows")
     vec_col = [
         f.name
@@ -480,10 +500,13 @@ def sq8_index_refit(spark, src_path: str, dst_path: str) -> str:
     mn, sc = _sq8_params(rows, d, vec_col)
 
     def build(vdir: str) -> None:
-        spark.createDataFrame(
-            [(mn, sc)], "mn array<double>, sc array<double>"
-        ).coalesce(1).write.mode("overwrite").parquet(f"{vdir}/meta")
         (
+            spark.createDataFrame([(mn, sc)], _SQ8_META)
+            .coalesce(1)
+            .write.mode("overwrite")
+            .parquet(f"{vdir}/meta")
+        )
+        _write_batch_keyed(
             rows.select(
                 F.col(id_col),
                 F.transform(
@@ -492,10 +515,9 @@ def sq8_index_refit(spark, src_path: str, dst_path: str) -> str:
                 ).alias("code"),
                 F.col(vec_col),
                 F.lit(0).cast("bigint").alias("batch"),
-            )
-            .write.mode("overwrite")
-            .partitionBy("batch")
-            .parquet(f"{vdir}/rows")
+            ),
+            f"{vdir}/rows",
+            ("batch",),
         )
         _sq8_write_manifest(spark, vdir, id_col)
 
@@ -536,13 +558,12 @@ def sq8_index_compact(spark, src_path: str, dst_path: str) -> str:
             f.name for f in rows.schema.fields
             if f.name not in (id_col, "batch")
         ]
-        (
+        _write_batch_keyed(
             rows.groupBy(id_col)
             .agg(*[F.max_by(c, "batch").alias(c) for c in others])
-            .withColumn("batch", F.lit(0).cast("bigint"))
-            .write.mode("overwrite")
-            .partitionBy("batch")
-            .parquet(f"{vdir}/rows")
+            .withColumn("batch", F.lit(0).cast("bigint")),
+            f"{vdir}/rows",
+            ("batch",),
         )
         _sq8_write_manifest(spark, vdir, id_col)
 
@@ -554,17 +575,16 @@ def _sq8_write_manifest(spark, vdir: str, id_col: str) -> None:
     tree (compact/refit output) — a narrow id-column scan of the
     just-written rows, so appends landing AFTER the rebuild can still
     prove range disjointness against the folded history."""
-    (
+    _write_batch_keyed(
         spark.read.parquet(f"{vdir}/rows")
         .agg(
             F.min(F.col(id_col)).alias("min_id"),
             F.max(F.col(id_col)).alias("max_id"),
             F.count(F.lit(1)).cast("bigint").alias("n_rows"),
         )
-        .withColumn("batch", F.lit(0).cast("bigint"))
-        .write.mode("overwrite")
-        .partitionBy("batch")
-        .parquet(f"{vdir}/rows_manifest")
+        .withColumn("batch", F.lit(0).cast("bigint")),
+        f"{vdir}/rows_manifest",
+        ("batch",),
     )
 
 
@@ -622,11 +642,7 @@ def sq8_topk_at_rest(
     id ranges are pairwise disjoint (the append-only crawl case), so
     the correctness fix costs nothing until a re-delivery actually
     overlaps."""
-    from .retrieval import _batches_disjoint
-
-    meta = spark.read.parquet(f"{index_path}/meta").collect()[0]
-    mn = [float(v) for v in meta["mn"]]
-    sc = [float(v) for v in meta["sc"]]
+    mn, sc = _sq8_meta(spark, index_path)
     d = len(mn)
     qq = [
         max(0, min(255, math.floor((float(query_vec[j]) - mn[j]) * sc[j])))
@@ -929,12 +945,12 @@ def srp_index_write(
     n_planes = bits_per_table * n_tables
     sig = srp_signature(embeddings, dim, n_planes, vec_col)
     tables = _srp_table_structs(bits_per_table, n_tables)
-    (
+    _write_batch_keyed(
         sig.select(F.col(id_col), F.col(vec_col), F.explode(tables).alias("tb"))
-        .select(id_col, vec_col, "tb.t", "tb.bucket")
-        .write.mode("overwrite")
-        .partitionBy("t", "bucket")
-        .parquet(path)
+        .select(id_col, vec_col, "tb.t", "tb.bucket"),
+        path,
+        ("t", "bucket"),
+        replace_tree=True,
     )
 
 
@@ -1031,12 +1047,6 @@ def srp_index_append(
     ``{"batch", "n_rows"}``."""
     from pyspark.errors import AnalysisException
 
-    from .retrieval import (
-        _drop_batch_dirs,
-        _drop_manifest_row,
-        _write_batch_keyed,
-    )
-
     _srp_require_packable(bits_per_table, n_tables)
     spark = embeddings.sparkSession
     try:
@@ -1126,8 +1136,6 @@ def srp_index_topk(
     ``rows_manifest`` proves the batches' id ranges pairwise
     disjoint, where a plain per-id dropDuplicates suffices; either
     pass runs over the PRUNED probe slice only, never the index."""
-    from .retrieval import _batches_disjoint
-
     meta = spark.read.parquet(f"{index_path}/meta").collect()[0]
     _srp_require_kind(meta, "gaussian", index_path)
     dim = int(meta["dim"])
@@ -1173,7 +1181,6 @@ def srp_index_compact(spark, src_path: str, dst_path: str) -> str:
     path (meta — including the fixed twin's scale — is copied
     verbatim; probe-identity pytest). Crash contract:
     publish_version."""
-    from .retrieval import _write_batch_keyed
     from ..sources.writers import publish_version
 
     meta = spark.read.parquet(f"{src_path}/meta")
@@ -1200,7 +1207,7 @@ def srp_index_compact(spark, src_path: str, dst_path: str) -> str:
         # then prune that vector into the wrong (t, bucket) partition.
         # Folding the struct guarantees vector and bucket always come
         # from the same winning row.
-        (
+        _write_batch_keyed(
             rows.groupBy(id_col, "t")
             .agg(
                 F.max_by(F.struct(vec_col, "bucket"), "batch").alias("w")
@@ -1212,10 +1219,9 @@ def srp_index_compact(spark, src_path: str, dst_path: str) -> str:
                 "batch",
                 "t",
                 F.col("w.bucket").alias("bucket"),
-            )
-            .write.mode("overwrite")
-            .partitionBy("batch", "t", "bucket")
-            .parquet(f"{vdir}/rows")
+            ),
+            f"{vdir}/rows",
+            ("batch", "t", "bucket"),
         )
         # vector-count manifest from the t=0 slice (each vector has
         # exactly one row per table — partition-pruned single-table
@@ -1314,12 +1320,6 @@ def srp_index_append_fixed(
     ``{"batch", "n_rows"}``."""
     from pyspark.errors import AnalysisException
 
-    from .retrieval import (
-        _drop_batch_dirs,
-        _drop_manifest_row,
-        _write_batch_keyed,
-    )
-
     _srp_require_packable(bits_per_table, n_tables)
     spark = embeddings.sparkSession
     try:
@@ -1401,8 +1401,6 @@ def srp_index_topk_fixed(
     suffices), and the exact double cosine re-ranks. Every step is
     integer or frozen-shape IEEE — the DuckDB oracle replays append,
     fold, and probe in one statement."""
-    from .retrieval import _batches_disjoint
-
     meta = spark.read.parquet(f"{index_path}/meta").collect()[0]
     _srp_require_kind(meta, "fixed", index_path)
     dim = int(meta["dim"])
@@ -1821,11 +1819,11 @@ def ivf_index_write(
     list structure expressed as parquet partition layout (and unlike
     the SRP multi-table index, each vector lives in exactly ONE cell,
     so there is no storage multiplier)."""
-    (
-        ivf_assign(embeddings, centroids, vec_col)
-        .write.mode("overwrite")
-        .partitionBy("ivf_cell")
-        .parquet(path)
+    _write_batch_keyed(
+        ivf_assign(embeddings, centroids, vec_col),
+        path,
+        ("ivf_cell",),
+        replace_tree=True,
     )
 
 
@@ -1926,12 +1924,6 @@ def ivf_index_append(
 
     Returns {"batch", "n_rows", "mean_d2", "drift_ratio"}."""
     from pyspark.errors import AnalysisException
-
-    from .retrieval import (
-        _drop_batch_dirs,
-        _drop_manifest_row,
-        _write_batch_keyed,
-    )
 
     spark = embeddings.sparkSession
     try:
@@ -2042,8 +2034,6 @@ def ivf_index_topk(
     — the append-only crawl case skips the fold entirely, and the
     fold only ever runs over the PRUNED nprobe/n_cells slice, never
     the index."""
-    from .retrieval import _batches_disjoint
-
     crows = spark.read.parquet(f"{index_path}/centroids").orderBy("cell")
     centroids = np.asarray([list(r["c"]) for r in crows.collect()])
     q = np.asarray(query_vec, dtype=np.float64)
@@ -2168,16 +2158,15 @@ def ivf_index_compact(spark, src_path: str, dst_path: str) -> str:
             for f in rows.schema.fields
             if f.name not in (id_col, "batch", "ivf_cell")
         ]
-        (
+        _write_batch_keyed(
             rows.groupBy(id_col)
             .agg(
                 *[F.max_by(c, "batch").alias(c) for c in others],
                 F.max_by("ivf_cell", "batch").alias("ivf_cell"),
             )
-            .withColumn("batch", F.lit(0).cast("bigint"))
-            .write.mode("overwrite")
-            .partitionBy("batch", "ivf_cell")
-            .parquet(f"{vdir}/rows")
+            .withColumn("batch", F.lit(0).cast("bigint")),
+            f"{vdir}/rows",
+            ("batch", "ivf_cell"),
         )
         folded = spark.read.parquet(f"{vdir}/rows")
         st = folded.agg(
@@ -2185,19 +2174,21 @@ def ivf_index_compact(spark, src_path: str, dst_path: str) -> str:
             F.avg("d2").alias("mean_d2"),
         ).collect()[0]
         m = float(st["mean_d2"] or 0.0)
-        spark.createDataFrame(
-            [
-                (
-                    0,
-                    int(st["n_rows"]),
-                    m,
-                    m / fit_mean_d2 if fit_mean_d2 > 0 else 1.0,
-                )
-            ],
-            "batch bigint, n_rows bigint, mean_d2 double,"
-            " drift_ratio double",
-        ).write.mode("overwrite").partitionBy("batch").parquet(
-            f"{vdir}/drift"
+        _write_batch_keyed(
+            spark.createDataFrame(
+                [
+                    (
+                        0,
+                        int(st["n_rows"]),
+                        m,
+                        m / fit_mean_d2 if fit_mean_d2 > 0 else 1.0,
+                    )
+                ],
+                "batch bigint, n_rows bigint, mean_d2 double,"
+                " drift_ratio double",
+            ),
+            f"{vdir}/drift",
+            ("batch",),
         )
         # agg-then-withColumn (the _sq8_write_manifest discipline):
         # the read-back manifest schema puts the `batch` partition
@@ -2285,12 +2276,6 @@ def ivf_index_append_fixed(
     mis-quantizing. Returns {"batch", "n_rows"}."""
     from pyspark.errors import AnalysisException
 
-    from .retrieval import (
-        _drop_batch_dirs,
-        _drop_manifest_row,
-        _write_batch_keyed,
-    )
-
     spark = embeddings.sparkSession
     base = _fixed_base(embeddings, id_col, vec_col, scale)
     try:
@@ -2376,8 +2361,6 @@ def ivf_index_topk_fixed(
     the index's own ``meta`` (round-15 review — a caller-held scale
     could silently quantize the query on a different grid than the
     stored centroids)."""
-    from .retrieval import _batches_disjoint
-
     scale = int(
         spark.read.parquet(f"{index_path}/meta").collect()[0]["scale"]
     )
@@ -3163,11 +3146,11 @@ def semantic_index_write_fixed(
     spark = embeddings.sparkSession
     stored = spark.read.parquet(f"{path}/centroids")
     base = _fixed_base(embeddings, id_col, vec_col, scale)
-    (
-        _fixed_assign(base, stored, id_col)
-        .write.mode("overwrite")
-        .partitionBy("ivf_cell")
-        .parquet(f"{path}/rows")
+    _write_batch_keyed(
+        _fixed_assign(base, stored, id_col),
+        f"{path}/rows",
+        ("ivf_cell",),
+        replace_tree=True,
     )
 
 
@@ -3252,8 +3235,6 @@ def semantic_index_append_fixed(
     whose corrected vectors assign to DIFFERENT cells would otherwise
     strand the superseded rows, and the incremental dedup would keep
     verifying candidates against them)."""
-    from .retrieval import _drop_batch_dirs
-
     spark = new_df.sparkSession
     cents = spark.read.parquet(f"{index_path}/centroids")
     assigned = _fixed_assign(
@@ -3262,25 +3243,9 @@ def semantic_index_append_fixed(
     _drop_batch_dirs(
         spark, batch_id, f"{index_path}/rows/ivf_cell=*"
     )
-    old = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            assigned.write.mode("overwrite")
-            .partitionBy("ivf_cell", "batch")
-            .parquet(f"{index_path}/rows")
-        )
-    finally:
-        if old is not None:
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", old
-            )
-        else:
-            # key was unset before: leaving it set to dynamic would
-            # silently change later overwrite-partitionBy writes
-            spark.conf.unset(
-                "spark.sql.sources.partitionOverwriteMode"
-            )
+    _write_batch_keyed(
+        assigned, f"{index_path}/rows", ("ivf_cell", "batch")
+    )
 
 
 def semantic_index_write(
@@ -3308,19 +3273,18 @@ def semantic_index_write(
         [(i, [float(x) for x in row]) for i, row in enumerate(cents)],
         "cell_id int, centroid array<double>",
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
-    (
-        ivf_assign(embeddings, cents, vec_col)
-        .select(
+    _write_batch_keyed(
+        ivf_assign(embeddings, cents, vec_col).select(
             F.col(id_col),
             F.col("ivf_cell"),
             F.transform(F.col(vec_col), lambda x: x.cast("double")).alias(
                 "v"
             ),
             l2_norm(F.col(vec_col)).alias("nrm"),
-        )
-        .write.mode("overwrite")
-        .partitionBy("ivf_cell")
-        .parquet(f"{path}/rows")
+        ),
+        f"{path}/rows",
+        ("ivf_cell",),
+        replace_tree=True,
     )
 
 
@@ -3394,8 +3358,6 @@ def semantic_index_append(
     replay-idempotent like :func:`semantic_index_append_fixed`,
     including the same cross-cell leaf delete before the write (a
     different-content replay must replace, not merge)."""
-    from .retrieval import _drop_batch_dirs
-
     spark = new_df.sparkSession
     cents = semantic_read_centroids(spark, index_path)
     assigned = _assign_vnrm(new_df, cents, id_col, vec_col).withColumn(
@@ -3404,22 +3366,6 @@ def semantic_index_append(
     _drop_batch_dirs(
         spark, batch_id, f"{index_path}/rows/ivf_cell=*"
     )
-    old = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            assigned.write.mode("overwrite")
-            .partitionBy("ivf_cell", "batch")
-            .parquet(f"{index_path}/rows")
-        )
-    finally:
-        if old is not None:
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", old
-            )
-        else:
-            # key was unset before: leaving it set to dynamic would
-            # silently change later overwrite-partitionBy writes
-            spark.conf.unset(
-                "spark.sql.sources.partitionOverwriteMode"
-            )
+    _write_batch_keyed(
+        assigned, f"{index_path}/rows", ("ivf_cell", "batch")
+    )

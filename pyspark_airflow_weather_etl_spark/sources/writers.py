@@ -174,6 +174,11 @@ def publish_version(spark, path: str, build) -> str:
     versions = _list_complete_versions(fs, jvm, root)
     nxt = (versions[-1][0] + 1) if versions else 1
     vname = f"v-{nxt:06d}"
+    # a build that crashed under this name left an unmarked dir: start
+    # empty, so none of its leaves survive a dynamic-overwrite build
+    leftover = jvm.org.apache.hadoop.fs.Path(root, vname)
+    if fs.exists(leftover):
+        fs.delete(leftover, True)
     build(f"{base}/{vname}")
     marker = jvm.org.apache.hadoop.fs.Path(root, f"{vname}/_SUCCESS")
     if not fs.exists(marker):

@@ -78,12 +78,9 @@ SLOW_TESTS = {
     "test_iterate.py::test_reliable_checkpoint_equals_local",
     "test_kmeans.py::test_diversity_sample_caps_and_spans_cells",
     "test_oracle_parity.py::test_oracle_parity[bm25_prf_expanded_at_rest]",
-    "test_oracle_parity.py::test_oracle_parity[bm25_topk_compacted]",
     "test_oracle_parity.py::test_oracle_parity[semantic_dedup_incremental_cells]",
     "test_oracle_parity.py::test_oracle_parity[srp_ann_topk_incremental_fixed]",
-    "test_oracle_parity.py::test_oracle_parity[streaming_bm25_index_topk]",
     "test_oracle_parity.py::test_oracle_parity[streaming_incremental_dedup]",
-    "test_oracle_parity.py::test_oracle_parity[streaming_phrase_index_match]",
     "test_oracle_parity.py::test_oracle_parity[streaming_scd2_sealed_store]",
     "test_oracle_parity.py::test_oracle_parity[streaming_semantic_dedup]",
     "test_oracle_parity.py::test_oracle_parity[streaming_span_corruption]",
@@ -119,18 +116,14 @@ SLOW_TESTS = {
     "test_retrieval.py::test_at_rest_strategies_are_result_identical",
     "test_retrieval.py::test_bm25_compact_repair_empty_doc_edge",
     "test_retrieval.py::test_bm25_compact_repairs_redelivered_docs",
-    "test_retrieval.py::test_bm25_completed_replay_replaces_stale_subpartitions",
     "test_retrieval.py::test_bm25_probe_overlap_guard",
     "test_retrieval.py::test_compacted_forward_index_serves_prf",
-    "test_retrieval.py::test_index_compaction_probe_identical_and_versioned",
-    "test_retrieval.py::test_positional_compaction_probe_identical_and_versioned",
     "test_retrieval.py::test_prf_fails_closed_on_forward_index_downgrade",
     "test_scale.py::TestCompaction::test_oversized_partition_splits_into_target_files",
     "test_similarity.py::TestIncrementalSemanticDedup::test_fixed_loop_equals_oneshot_any_order",
     "test_similarity.py::TestIncrementalSemanticDedup::test_kmeans_loop_equals_batch_restriction",
     "test_similarity.py::test_append_manifest_fails_closed_on_partial_replay",
     "test_similarity.py::test_blocked_near_dup_precision_and_recall",
-    "test_similarity.py::test_completed_replay_replaces_stale_subpartitions",
     "test_similarity.py::test_fixed_ivf_never_regenerates_centroids",
     "test_similarity.py::test_ivf_fixed_lifecycle_fold_semantics",
     "test_similarity.py::test_ivf_index_lifecycle",

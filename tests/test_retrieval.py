@@ -509,6 +509,122 @@ def test_batch_keyed_write_restores_unset_conf(spark, docs, tmp_path):
             spark.conf.set(key, had)
 
 
+def _files_per_leaf(tree: str, level: str) -> list[int]:
+    """Data files in each ``batch=*/<level>=*`` leaf of an index tree."""
+    import glob
+
+    leaves = glob.glob(f"{tree}/batch=*/{level}=*")
+    assert leaves, f"no {level}= leaves under {tree}"
+    return [len(glob.glob(f"{leaf}/*.parquet")) for leaf in leaves]
+
+
+def test_bm25_writes_one_file_per_leaf(spark, docs, tmp_path):
+    """Append and compaction writes rebalance on (batch, pfx): every
+    postings leaf holds exactly one data file at fixture scale, where
+    each upstream task used to write its own file into each leaf."""
+    from pyspark_airflow_weather_etl_spark.operators.retrieval import (
+        bm25_index_append,
+        bm25_index_compact,
+        bm25_index_current,
+    )
+
+    src = str(tmp_path / "src")
+    for b in range(3):
+        bm25_index_append(docs.where(F.col("doc_id") % 3 == b), src, b)
+    assert set(_files_per_leaf(f"{src}/postings", "pfx")) == {1}
+    bm25_index_compact(spark, src, str(tmp_path / "dst"))
+    live = bm25_index_current(spark, str(tmp_path / "dst"))
+    assert set(_files_per_leaf(f"{live}/postings", "pfx")) == {1}
+
+
+def test_positional_writes_one_file_per_leaf(spark, docs, tmp_path):
+    """The positional twin of the BM25 leaf-file rule."""
+    from pyspark_airflow_weather_etl_spark.operators.retrieval import (
+        positional_index_append,
+        positional_index_compact,
+    )
+
+    src = str(tmp_path / "src")
+    for b in range(3):
+        positional_index_append(
+            docs.where(F.col("doc_id") % 3 == b), src, b
+        )
+    assert set(_files_per_leaf(f"{src}/postings_pos", "pfx")) == {1}
+    v = positional_index_compact(spark, src, str(tmp_path / "dst"))
+    got = _files_per_leaf(str(tmp_path / "dst" / v / "postings_pos"), "pfx")
+    assert set(got) == {1}
+
+
+def _write_stage_count(spark, write) -> int:
+    """Stages the Spark jobs of ``write()`` ran (a shuffle adds one)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"stages-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count write stages")
+    try:
+        write()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    return sum(
+        len(tracker.getJobInfo(j).stageIds)
+        for j in tracker.getJobIdsForGroup(group)
+    )
+
+
+def test_batch_only_tree_write_gains_no_exchange(spark, tmp_path):
+    """Only trees with a level below ``batch`` are rebalanced: a
+    manifest-shaped write runs as one stage, with no shuffle, while
+    the same rows under (batch, pfx) gain the rebalance exchange."""
+    from pyspark_airflow_weather_etl_spark.operators.retrieval import (
+        _write_batch_keyed,
+    )
+
+    rows = spark.range(64, numPartitions=4).select(
+        F.col("id").alias("doc_id"),
+        F.lit(7).cast("bigint").alias("batch"),
+        (F.col("id") % 5).cast("string").alias("pfx"),
+    )
+    manifest = str(tmp_path / "manifest")
+    assert _write_stage_count(
+        spark,
+        lambda: _write_batch_keyed(
+            rows.drop("pfx"), manifest, ("batch",)
+        ),
+    ) == 1
+    postings = str(tmp_path / "postings")
+    assert _write_stage_count(
+        spark,
+        lambda: _write_batch_keyed(rows, postings, ("batch", "pfx")),
+    ) > 1
+    assert set(_files_per_leaf(postings, "pfx")) == {1}
+
+
+@pytest.mark.parametrize("id_type", ["int", "string"])
+def test_empty_match_queries_keep_corpus_id_type(spark, id_type):
+    """No phrases / no pairs: the empty result's doc_id has the corpus
+    id type, as on the non-empty path (it was hardcoded bigint)."""
+    from pyspark_airflow_weather_etl_spark.operators.retrieval import (
+        phrase_counts,
+        proximity_counts,
+    )
+
+    corpus = spark.createDataFrame(
+        [(1, "hash join"), (2, "table scan")], "doc_id int, text string"
+    ).select(F.col("doc_id").cast(id_type).alias("doc_id"), "text")
+    for empty, full in (
+        (phrase_counts(corpus, []), phrase_counts(corpus, [(1, "hash join")])),
+        (
+            proximity_counts(corpus, []),
+            proximity_counts(corpus, [(1, "hash", "join")]),
+        ),
+    ):
+        assert empty.collect() == []
+        assert empty.schema.simpleString() == full.schema.simpleString()
+        assert empty.schema["doc_id"].dataType.simpleString() == id_type
+
+
 def test_index_compaction_probe_identical_and_versioned(spark, docs, tmp_path):
     """Compacting N batch deltas into one published version changes
     probe results not one bit; the version dir resolves through the

@@ -15,6 +15,7 @@ import pytest
 
 from pyspark_airflow_weather_etl_spark.sources.writers import (
     overwrite_parquet_swap,
+    publish_version,
     read_serving_table,
     resolve_serving_version,
     write_serving_version,
@@ -85,6 +86,20 @@ def test_partial_version_dir_is_ignored(spark, tmp_path):
     # ...and with the pointer also gone, the fallback scan still
     # refuses the partial dir
     os.remove(os.path.join(path, "_current"))
+    assert resolve_serving_version(spark, path) == "v-000001"
+
+
+def test_publish_starts_from_empty_version_dir(spark, tmp_path):
+    """A build that crashed under the next version's name left leaves
+    behind; the next publish reuses the name and must not keep them —
+    index builds write with dynamic overwrite, which replaces only the
+    leaves present in the new data."""
+    path = str(tmp_path / "index")
+    stale = tmp_path / "index" / "v-000001" / "postings" / "pfx=zz"
+    stale.mkdir(parents=True)
+    (stale / "part-00000.parquet").write_bytes(b"stale")
+    assert publish_version(spark, path, lambda vdir: None) == "v-000001"
+    assert not stale.exists()
     assert resolve_serving_version(spark, path) == "v-000001"
 
 
