@@ -282,7 +282,6 @@ def ivfpq_index_write(
         coded.select(id_col, "pq_code", vec_col, "ivf_cell"),
         path,
         ("ivf_cell",),
-        replace_tree=True,
     )
 
 

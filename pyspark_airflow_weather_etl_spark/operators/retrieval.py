@@ -38,9 +38,11 @@ surface (hard-negative mining, eval-retrieval, corpus audit by query).
 from __future__ import annotations
 
 import hashlib
+import json
 
 from pyspark.sql import DataFrame, Row, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, _parse_datatype_string
 
 from ..caching import claim_group, persist_into
 from .dedup import spread_small_scan
@@ -129,7 +131,7 @@ def _bm25_overlap_guard(
 
 def _query_terms(spark: SparkSession, queries: list[tuple[int, str]]) -> DataFrame:
     """(query_id, token) — distinct whitespace terms of each query."""
-    q = spark.createDataFrame(queries, "query_id bigint, qtext string")
+    q = _literal_frame(spark, queries, "query_id bigint, qtext string")
     return q.select(
         "query_id", F.explode(tokens("qtext")).alias("token")
     ).distinct()
@@ -330,9 +332,7 @@ def bm25_hard_negatives(
     return _rank_topk(neg, k)
 
 
-def _write_batch_keyed(
-    df: DataFrame, out_path: str, partition_cols, replace_tree: bool = False
-) -> None:
+def _write_batch_keyed(df: DataFrame, out_path: str, partition_cols) -> None:
     """The one writer of every at-rest index tree.
 
     Rows are rebalanced on the tree's partition columns when the
@@ -349,23 +349,38 @@ def _write_batch_keyed(
     rows) hold one leaf per write and stay unshuffled — the exchange
     would be a pure extra job.
 
-    Dynamic partition overwrite (the default) replaces exactly the
-    partitions being written, so a crashed-and-replayed (or outright
-    duplicated) append of the same batch lands the identical bytes
-    (the streaming/lm_monitor batch-keyed idiom). ``replace_tree``
-    is the one-shot build: the whole tree under ``out_path`` is
-    replaced, so a rebuild with fewer cells leaves no stale leaf. The
-    mode is a writer option, never a session conf flip, so a shared
-    session's conf is never touched mid-write."""
+    Dynamic partition overwrite replaces exactly the partitions being
+    written, so a crashed-and-replayed (or outright duplicated) append
+    of the same batch lands the identical bytes (the
+    streaming/lm_monitor batch-keyed idiom). The mode is a writer
+    option, never a session conf flip, so a shared session's conf is
+    never touched mid-write."""
     if any(c != "batch" for c in partition_cols):
         df = df.hint("rebalance", *partition_cols)
     (
         df.write.mode("overwrite")
-        .option(
-            "partitionOverwriteMode", "static" if replace_tree else "dynamic"
-        )
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy(*partition_cols)
         .parquet(out_path)
+    )
+
+
+def _literal_frame(spark: SparkSession, rows, ddl: str) -> DataFrame:
+    """``rows`` (tuples in the column order of ``ddl``) as a frame
+    planned entirely in the JVM, for index metadata rows and probe
+    query tables. ``createDataFrame`` of a Python list is a Python RDD:
+    every scan of it starts a Python worker in each of its
+    default-parallelism tasks, about 0.3 s per one-row metadata write
+    at fixture scale. Here the rows travel as one JSON string literal
+    that ``from_json`` parses on a one-partition range, with the same
+    nullable schema. Only for types JSON carries exactly (integers,
+    strings, doubles, booleans and arrays of them); Python's float
+    repr round-trips through the parser bit for bit."""
+    schema = _parse_datatype_string(ddl)
+    names = schema.fieldNames()
+    payload = json.dumps([dict(zip(names, r)) for r in rows])
+    return spark.range(0, 1, 1, 1).select(
+        F.inline(F.from_json(F.lit(payload), ArrayType(schema)))
     )
 
 
@@ -570,8 +585,8 @@ def _scores_at_rest(
         {hashlib.md5(t.encode("utf-8")).hexdigest()[:_PFX_LEN] for t in terms}
     )
     qt = F.broadcast(
-        spark.createDataFrame(
-            sorted(set(term_rows)), "query_id bigint, token string"
+        _literal_frame(
+            spark, sorted(set(term_rows)), "query_id bigint, token string"
         )
     )
     # explicit schemas on every index read: partition-column type
@@ -1070,7 +1085,8 @@ def _write_doc_manifest(
     max_doc_id, n_docs); an empty batch records the range (0, -1)."""
     n = int(mm["n_docs"])
     _write_batch_keyed(
-        spark.createDataFrame(
+        _literal_frame(
+            spark,
             [
                 (
                     int(mm["min_doc_id"]) if n else 0,

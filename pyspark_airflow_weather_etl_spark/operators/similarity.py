@@ -31,6 +31,7 @@ from .retrieval import (
     _batches_disjoint,
     _drop_batch_dirs,
     _drop_manifest_row,
+    _literal_frame,
     _metadata_rows,
     _write_batch_keyed,
 )
@@ -246,12 +247,9 @@ def sq8_index_append(
     else:
         d = len(embeddings.select(vec_col).first()[0])
         mn, sc = _sq8_params(embeddings, d, vec_col)
-        (
-            spark.createDataFrame([(mn, sc)], _SQ8_META)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{path}/meta")
-        )
+        _literal_frame(spark, [(mn, sc)], _SQ8_META).write.mode(
+            "overwrite"
+        ).parquet(f"{path}/meta")
     raw = _sq8_unclamped(vec_col, mn, sc)
     guard = embeddings.agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -304,7 +302,8 @@ def sq8_index_append(
     # batch AND streaming pipelines alike (batch-keyed dynamic
     # overwrite keeps a replayed batch from double-logging)
     _write_batch_keyed(
-        spark.createDataFrame(
+        _literal_frame(
+            spark,
             [
                 (
                     int(rep["batch"]),
@@ -500,12 +499,9 @@ def sq8_index_refit(spark, src_path: str, dst_path: str) -> str:
     mn, sc = _sq8_params(rows, d, vec_col)
 
     def build(vdir: str) -> None:
-        (
-            spark.createDataFrame([(mn, sc)], _SQ8_META)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{vdir}/meta")
-        )
+        _literal_frame(spark, [(mn, sc)], _SQ8_META).write.mode(
+            "overwrite"
+        ).parquet(f"{vdir}/meta")
         _write_batch_keyed(
             rows.select(
                 F.col(id_col),
@@ -950,7 +946,6 @@ def srp_index_write(
         .select(id_col, vec_col, "tb.t", "tb.bucket"),
         path,
         ("t", "bucket"),
-        replace_tree=True,
     )
 
 
@@ -1823,7 +1818,6 @@ def ivf_index_write(
         ivf_assign(embeddings, centroids, vec_col),
         path,
         ("ivf_cell",),
-        replace_tree=True,
     )
 
 
@@ -3150,7 +3144,6 @@ def semantic_index_write_fixed(
         _fixed_assign(base, stored, id_col),
         f"{path}/rows",
         ("ivf_cell",),
-        replace_tree=True,
     )
 
 
@@ -3284,7 +3277,6 @@ def semantic_index_write(
         ),
         f"{path}/rows",
         ("ivf_cell",),
-        replace_tree=True,
     )
 
 

@@ -601,6 +601,29 @@ def test_batch_only_tree_write_gains_no_exchange(spark, tmp_path):
     assert set(_files_per_leaf(postings, "pfx")) == {1}
 
 
+def test_literal_frame_matches_create_dataframe(spark):
+    """Index metadata rows and probe query tables are planned in the
+    JVM: same rows, same nullable schema as ``createDataFrame``, doubles
+    bit-exact, and no Python RDD scan in the plan."""
+    from pyspark_airflow_weather_etl_spark.operators.retrieval import (
+        _literal_frame,
+    )
+
+    ddl = "id bigint, token string, x double, v array<double>"
+    rows = [
+        (2**62 + 1, 'q"uo\\te é', 0.1 + 0.2, [1 / 3, -2.5e-300, 7.0]),
+        (-1, "", float("inf"), []),
+        (0, None, None, None),
+    ]
+    got = _literal_frame(spark, rows, ddl)
+    want = spark.createDataFrame(rows, ddl)
+    assert got.schema == want.schema
+    assert got.collect() == want.collect()
+    assert "ExistingRDD" not in got._jdf.queryExecution().toString()
+    empty = _literal_frame(spark, [], ddl)
+    assert empty.schema == want.schema and empty.collect() == []
+
+
 @pytest.mark.parametrize("id_type", ["int", "string"])
 def test_empty_match_queries_keep_corpus_id_type(spark, id_type):
     """No phrases / no pairs: the empty result's doc_id has the corpus
