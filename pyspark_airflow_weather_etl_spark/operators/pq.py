@@ -49,11 +49,28 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .retrieval import (
-    _batches_disjoint,
-    _drop_batch_dirs,
-    _drop_manifest_row,
+from .lifecycle import (
     _write_batch_keyed,
+    append_batch,
+    as_stored,
+    compact_rows,
+    drift_log,
+    drift_ratio,
+    drift_row,
+    fold_latest,
+    frozen_meta,
+    id_range,
+    path_exists,
+    refit,
+    rows_disjoint,
+    rows_manifest,
+    write_literal,
+)
+from .similarity import (
+    _ivf_centroids,
+    _probe_cells,
+    ivf_assign,
+    ivf_train_centroids,
 )
 
 SEED = 42
@@ -270,8 +287,6 @@ def ivfpq_index_write(
     stays in the original space (R is orthogonal, so L2 is identical
     in both). The coarse quantizer also stays in the original space:
     cell geometry and rotation are independent concerns."""
-    from .similarity import ivf_assign
-
     assigned = ivf_assign(embeddings, centroids, vec_col)
     coded = (
         pq_encode(assigned, codebooks, vec_col)
@@ -317,17 +332,14 @@ def ivfpq_topk_at_rest(
     Returns (id, l2_d2) — exact distances for the returned rows, so
     downstream thresholds mean what they say even though the candidate
     set is approximate."""
-    q = np.asarray(query_vec, dtype=np.float64)
-    d2 = ((np.asarray(centroids, dtype=np.float64) - q[None, :]) ** 2).sum(
-        axis=1
-    )
-    probes = [int(i) for i in d2.argsort()[:nprobe]]
+    probes = _probe_cells(centroids, query_vec, nprobe)
     lut_q = (
         query_vec
         if rotation is None
         else [
             float(x)
-            for x in q @ np.asarray(rotation, dtype=np.float64)
+            for x in np.asarray(query_vec, dtype=np.float64)
+            @ np.asarray(rotation, dtype=np.float64)
         ]
     )
     lut = adc_lut(lut_q, codebooks)
@@ -339,10 +351,24 @@ def ivfpq_topk_at_rest(
         .orderBy(F.col("adc_d2").asc_nulls_last(), F.col(id_col))
         .limit(rerank)
     )
-    qlit = F.array(*[F.lit(float(x)) for x in query_vec])
     # the survivor set is rerank rows by construction — broadcast it
     # so the re-rank join never shuffles the probed partitions
-    exact = idx.join(F.broadcast(cand.select(id_col)), id_col).select(
+    return _exact_l2_topk(
+        idx.join(F.broadcast(cand.select(id_col)), id_col),
+        query_vec,
+        k,
+        id_col,
+        vec_col,
+    )
+
+
+def _exact_l2_topk(
+    vecs: DataFrame, query_vec: list[float], k: int, id_col: str, vec_col: str
+) -> DataFrame:
+    """(id, l2_d2) of the ``k`` re-rank survivors nearest the query by
+    exact squared L2, ties to the lowest id."""
+    qlit = F.array(*[F.lit(float(x)) for x in query_vec])
+    exact = vecs.select(
         F.col(id_col),
         F.round(
             F.aggregate(
@@ -894,12 +920,10 @@ def ivfpq_index_append(
     vec_col: str = "embedding",
     opq: bool = False,
 ) -> dict:
-    """Append one vector batch to an IVF-PQ index — the
-    :func:`..operators.similarity.ivf_index_append` lifecycle applied
-    to the code-at-rest family (VERDICT r15 #1, the last index family
-    without O(batch) appends): per-batch cost is O(batch), nothing at
-    rest re-read, batch-keyed dynamic partition overwrite so a
-    replayed batch lands identical bytes.
+    """Append one vector batch to an IVF-PQ index: O(batch) per crawl
+    increment through the lifecycle kernel
+    (:func:`.lifecycle.append_batch`: fail-closed manifest, replay is
+    replacement).
 
     BOTH quantizers freeze at creation: batch 0 trains the coarse
     centroids (:func:`..operators.similarity.ivf_train_centroids`)
@@ -911,12 +935,11 @@ def ivfpq_index_append(
     monitored the same way as the plain-IVF family). The quantizer
     shape ``(m, n_codes, n_cells)`` persists in ``meta`` BEFORE any
     quantizer rows (crash ordering: meta → codebooks → centroids
-    last, so the centroids read is the creation marker and a crash
+    last, so the centroids are the creation marker and a crash
     mid-creation leaves a tree the next append simply recreates —
     never rows under lost quantizers); a later append passing a
-    different shape raises. A tree with centroids but no meta is a
-    foreign/partial artifact and is refused (the
-    ``ivf_index_append_fixed`` discipline). Layout::
+    different shape raises, and a tree with centroids but no meta is
+    refused (:func:`.lifecycle.frozen_meta`). Layout::
 
         {path}/meta                   (m, n_codes, n_cells, fit_mean_qerr)
         {path}/centroids              (cell, c array<double>)
@@ -944,42 +967,17 @@ def ivfpq_index_append(
     The flag freezes in meta: appending the other flavor raises
     (codes from the two spaces are incomparable under one LUT).
 
-    Fail-closed replay: the manifest row drops first, then the
-    batch's row dirs, then rows land, then the manifest — a crash
-    anywhere leaves the batch missing from the manifest so probes run
-    their latest-wins fold instead of trusting a stale range.
     Returns ``{"batch", "n_rows", "mean_qerr", "drift_ratio"}``."""
-    from pyspark.errors import AnalysisException
-
-    from .similarity import _manifest_from_agg, ivf_assign, ivf_train_centroids
-
     spark = embeddings.sparkSession
-    try:
-        crows = spark.read.parquet(f"{path}/centroids").orderBy("cell")
-        centroids = np.asarray([list(r["c"]) for r in crows.collect()])
-        created = True
-    except AnalysisException:
-        created = False
-    if created:
-        try:
-            meta = spark.read.parquet(f"{path}/meta").collect()[0]
-        except AnalysisException:
-            raise ValueError(
-                f"IVF-PQ index at {path} has centroids but no meta —"
-                " its quantizer shape (m, n_codes, n_cells) is"
-                " unknowable; rebuild the index"
-            )
-        stored = (
-            int(meta["m"]),
-            int(meta["n_codes"]),
-            int(meta["n_cells"]),
-        )
-        if stored != (m, n_codes, n_cells):
-            raise ValueError(
-                f"IVF-PQ index at {path} was created with (m, n_codes,"
-                f" n_cells)={stored}; appending with"
-                f" {(m, n_codes, n_cells)} would encode incompatibly"
-            )
+    meta = frozen_meta(
+        spark,
+        path,
+        "centroids",
+        "IVF-PQ index",
+        "encode",
+        {"m": m, "n_codes": n_codes, "n_cells": n_cells},
+    )
+    if meta is not None and path_exists(spark, f"{path}/centroids"):
         stored_opq = bool(meta["opq"]) if "opq" in meta.__fields__ else False
         if stored_opq != opq:
             raise ValueError(
@@ -989,6 +987,7 @@ def ivfpq_index_append(
                 " spaces are incomparable under one ADC LUT)"
             )
         fit_mean_qerr = float(meta["fit_mean_qerr"])
+        centroids = _ivf_centroids(spark, path)
         books = _read_codebooks(spark, path, m, n_codes)
         R = _read_rotation(spark, path) if opq else None
     else:
@@ -1005,94 +1004,83 @@ def ivfpq_index_append(
                 embeddings, m, n_codes, id_col=id_col, vec_col=vec_col
             )
         fit_mean_qerr = None
-    try:
-        stored_schema = spark.read.parquet(f"{path}/rows").schema
-        embeddings = embeddings.select(
-            F.col(id_col).cast(stored_schema[id_col].dataType),
-            F.col(vec_col).cast(stored_schema[vec_col].dataType),
-        )
-    except AnalysisException:
-        pass  # first batch defines the types
-    src = embeddings.select(id_col, vec_col)
-    assigned = ivf_assign(src, centroids, vec_col)
+    embeddings = as_stored(embeddings, path, id_col, vec_col)
+    assigned = ivf_assign(embeddings, centroids, vec_col)
     coded = (
         opq_encode(assigned, R, books, vec_col, err_col="qerr")
         if opq
         else pq_encode(assigned, books, vec_col, err_col="qerr")
     ).persist()
-    stats = coded.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-        F.avg("qerr").alias("mean_qerr"),
+    st = coded.agg(
+        *id_range(id_col), F.avg("qerr").alias("mean_qerr")
     ).collect()[0]
-    mean_qerr = float(stats["mean_qerr"] or 0.0)
+    mean_qerr = float(st["mean_qerr"] or 0.0)
     if fit_mean_qerr is None:
-        # quantizer identity persists BEFORE any rows (crash
-        # ordering): meta first, centroids LAST — the centroids read
-        # above is the creation marker, so a crash between the writes
-        # leaves a tree the next append simply recreates, never rows
-        # under lost quantizers
+        # quantizer identity persists BEFORE any rows; the rotation
+        # too lands before the centroids (the creation marker), so a
+        # marked OPQ tree always has its rotation
         fit_mean_qerr = mean_qerr
-        spark.createDataFrame(
+        write_literal(
+            spark,
+            f"{path}/meta",
             [(m, n_codes, n_cells, fit_mean_qerr, opq)],
             "m int, n_codes int, n_cells int, fit_mean_qerr double,"
             " opq boolean",
-        ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
-        spark.createDataFrame(
+        )
+        write_literal(
+            spark,
+            f"{path}/codebooks",
             [
                 (j, c, [float(x) for x in books[j][c]])
                 for j in range(m)
                 for c in range(n_codes)
             ],
             "sub_j int, code int, cs array<double>",
-        ).coalesce(1).write.mode("overwrite").parquet(f"{path}/codebooks")
+        )
         if opq:
-            # rotation persists BEFORE centroids (the creation
-            # marker), so a crash can never leave a marked OPQ tree
-            # without its rotation
-            spark.createDataFrame(
+            write_literal(
+                spark,
+                f"{path}/rotation",
                 [(i, [float(x) for x in row]) for i, row in enumerate(R)],
                 "i int, r array<double>",
-            ).coalesce(1).write.mode("overwrite").parquet(
-                f"{path}/rotation"
             )
-        spark.createDataFrame(
+        write_literal(
+            spark,
+            f"{path}/centroids",
             [(i, [float(x) for x in row]) for i, row in enumerate(centroids)],
             "cell int, c array<double>",
-        ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
-    _drop_manifest_row(spark, f"{path}/rows_manifest", batch_id)
-    _drop_batch_dirs(spark, batch_id, f"{path}/rows")
-    _write_batch_keyed(
-        coded.select(
-            id_col, "pq_code", vec_col, "qerr", "ivf_cell"
-        ).withColumn("batch", F.lit(batch_id).cast("bigint")),
-        f"{path}/rows",
-        ("batch", "ivf_cell"),
-    )
-    drift_ratio = mean_qerr / fit_mean_qerr if fit_mean_qerr > 0 else 1.0
-    _write_batch_keyed(
-        spark.createDataFrame(
-            [
-                (
-                    int(batch_id),
-                    int(stats["n_rows"]),
+        )
+    append_batch(
+        spark,
+        path,
+        batch_id,
+        {
+            "rows": (
+                coded.select(
+                    id_col, "pq_code", vec_col, "qerr", "ivf_cell"
+                ).withColumn("batch", F.lit(batch_id).cast("bigint")),
+                ("batch", "ivf_cell"),
+            ),
+            "drift": (
+                drift_row(
+                    spark,
+                    batch_id,
+                    st["n_rows"],
+                    "qerr",
                     mean_qerr,
-                    float(drift_ratio),
-                )
-            ],
-            "batch bigint, n_rows bigint, mean_qerr double,"
-            " drift_ratio double",
-        ),
-        f"{path}/drift",
-        ("batch",),
+                    fit_mean_qerr,
+                ),
+                ("batch",),
+            ),
+        },
+        rows_manifest(coded, id_col, batch_id, st),
     )
-    mm, n_rows = _manifest_from_agg(coded, id_col, batch_id)
-    _write_batch_keyed(mm, f"{path}/rows_manifest", ("batch",))
     coded.unpersist(blocking=False)
     return {
         "batch": int(batch_id),
-        "n_rows": n_rows,
+        "n_rows": int(st["n_rows"]),
         "mean_qerr": mean_qerr,
-        "drift_ratio": float(drift_ratio),
+        "drift_ratio": drift_ratio(mean_qerr, fit_mean_qerr),
     }
 
 
@@ -1138,198 +1126,61 @@ def ivfpq_index_topk(
     survivors on their stored raw vectors. Returns (id, l2_d2) —
     exact distances for the returned rows.
 
-    Duplicate-id safety is the :func:`..operators.similarity.
-    ivf_index_topk` contract: multi-batch trees fold candidates to
-    one row per id (latest batch wins) UNLESS the per-append
-    ``rows_manifest`` proves the batches pairwise disjoint; both the
-    ADC pass (codes) and the re-rank pass (vectors) fold over the
-    PRUNED slice only. The two folds pick the same winning BATCH for
-    an id (max over the same key); codes and vectors from one batch
-    are consistent by construction of the append, and the final
-    ranking depends only on the re-ranked exact vector — ADC fold
-    choice affects candidate selection (recall), never the returned
-    distances."""
+    Duplicate-id safety: one manifest check
+    (:func:`.lifecycle.rows_disjoint`), then two latest-wins folds
+    over the PRUNED slice (:func:`.lifecycle.fold_latest`) — codes for
+    the ADC pass, vectors for the re-rank. Both pick the same winning
+    batch for an id, and the final ranking depends only on the
+    re-ranked exact vector — ADC fold choice affects candidate
+    selection (recall), never the returned distances."""
     meta = spark.read.parquet(f"{index_path}/meta").collect()[0]
     m, n_codes = int(meta["m"]), int(meta["n_codes"])
     opq = bool(meta["opq"]) if "opq" in meta.__fields__ else False
-    crows = spark.read.parquet(f"{index_path}/centroids").orderBy("cell")
-    centroids = np.asarray([list(r["c"]) for r in crows.collect()])
     books = _read_codebooks(spark, index_path, m, n_codes)
-    q = np.asarray(query_vec, dtype=np.float64)
-    cd2 = ((centroids - q[None, :]) ** 2).sum(axis=1)
-    probes = [int(i) for i in cd2.argsort()[:nprobe]]
+    probes = _probe_cells(_ivf_centroids(spark, index_path), query_vec, nprobe)
     # OPQ layout: the LUT is built from the ROTATED query (codes live
     # in rotated space); coarse ranking and the exact re-rank stay in
     # the original space, where L2 is identical under the orthogonal R
     lut_q = (
-        [float(x) for x in q @ _read_rotation(spark, index_path)]
+        [
+            float(x)
+            for x in np.asarray(query_vec, dtype=np.float64)
+            @ _read_rotation(spark, index_path)
+        ]
         if opq
         else query_vec
     )
     lut = adc_lut(lut_q, books)
     rows = spark.read.parquet(f"{index_path}/rows")
     pruned = rows.where(F.col("ivf_cell").isin(probes))
-    fold = not _batches_disjoint(
-        spark,
-        f"{index_path}/rows",
-        f"{index_path}/rows_manifest",
-        "min_id",
-        "max_id",
-        "n_rows",
-    )
-    codes = pruned.select(id_col, "pq_code", "batch")
-    if fold:
-        codes = codes.groupBy(id_col).agg(
-            F.max_by("pq_code", "batch").alias("pq_code")
-        )
+    disjoint = rows_disjoint(spark, index_path)
     cand = (
-        codes.select(
-            F.col(id_col), _adc_score(lut, "pq_code").alias("adc_d2")
-        )
+        fold_latest(pruned, id_col, ["pq_code"], disjoint)
+        .select(F.col(id_col), _adc_score(lut, "pq_code").alias("adc_d2"))
         .orderBy(F.col("adc_d2").asc_nulls_last(), F.col(id_col))
         .limit(rerank)
         .select(id_col)
     )
-    vecs = pruned.select(id_col, vec_col, "batch").join(
-        F.broadcast(cand), id_col
+    vecs = fold_latest(
+        pruned.join(F.broadcast(cand), id_col), id_col, [vec_col], disjoint
     )
-    if fold:
-        vecs = vecs.groupBy(id_col).agg(
-            F.max_by(vec_col, "batch").alias(vec_col)
-        )
-    qlit = F.array(*[F.lit(float(x)) for x in query_vec])
-    exact = vecs.select(
-        F.col(id_col),
-        F.round(
-            F.aggregate(
-                F.zip_with(
-                    F.col(vec_col),
-                    qlit,
-                    lambda x, y: (x.cast("double") - y)
-                    * (x.cast("double") - y),
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-            6,
-        ).alias("l2_d2"),
-    )
-    return exact.orderBy(
-        F.col("l2_d2").asc_nulls_last(), F.col(id_col)
-    ).limit(k)
+    return _exact_l2_topk(vecs, query_vec, k, id_col, vec_col)
 
 
 def ivfpq_index_compact(spark, src_path: str, dst_path: str) -> str:
     """Compact an IVF-PQ delta tree into a single-batch index
-    published as the next serving version under ``dst_path`` — the
-    :func:`..operators.similarity.ivf_index_compact` economics: cell
-    assignment and PQ codes are per-vector facts under the FROZEN
-    quantizers (meta/centroids/codebooks copied verbatim — they ARE
-    the index identity), so compaction folds re-delivered ids to
-    their latest row and re-partitions; probe results identical by
-    construction, and the rebuilt batch-0 manifest re-arms the
-    disjoint fast path for post-compaction appends.
-
-    The fold is ONE ``max_by(struct(pq_code, vec, ivf_cell), batch)``
-    per id — the srp_index_compact round-16 lesson: folding the
-    columns with independent max_by calls would let a batch tie
-    between duplicate in-batch rows persist a code (or cell)
-    inconsistent with the stored vector, and an inconsistent
-    ivf_cell would serve the vector from a partition the probe
-    never prunes to. Crash contract:
-    :func:`..sources.writers.publish_version`."""
-    from ..sources.writers import publish_version
-
-    from .similarity import _fs_exists
-
-    meta = spark.read.parquet(f"{src_path}/meta")
-    centroids = spark.read.parquet(f"{src_path}/centroids")
-    codebooks = spark.read.parquet(f"{src_path}/codebooks")
-    rotation = (
-        spark.read.parquet(f"{src_path}/rotation")
-        if _fs_exists(spark, f"{src_path}/rotation")
-        else None
+    published as the next serving version under ``dst_path``
+    (:func:`.lifecycle.compact_rows`): cell assignment and PQ codes
+    are per-vector facts under the FROZEN quantizers
+    (meta/codebooks/rotation/centroids copied verbatim — they ARE the
+    index identity), so compaction folds re-delivered ids to their
+    latest row — code, vector, residual and cell from one winning
+    row — and re-partitions; probe results are identical by
+    construction, and the rebuilt batch-0 manifest and drift row keep
+    both protocols working for post-compaction appends."""
+    return compact_rows(
+        spark, src_path, dst_path, ("batch", "ivf_cell"), drift="qerr"
     )
-
-    def build(vdir: str) -> None:
-        meta.coalesce(1).write.mode("overwrite").parquet(f"{vdir}/meta")
-        codebooks.coalesce(1).write.mode("overwrite").parquet(
-            f"{vdir}/codebooks"
-        )
-        if rotation is not None:
-            rotation.coalesce(1).write.mode("overwrite").parquet(
-                f"{vdir}/rotation"
-            )
-        centroids.coalesce(1).write.mode("overwrite").parquet(
-            f"{vdir}/centroids"
-        )
-        rows = spark.read.parquet(f"{src_path}/rows")
-        id_col = [
-            f.name
-            for f in rows.schema.fields
-            if f.name not in ("ivf_cell", "batch")
-            and "array" not in f.dataType.simpleString()
-        ][0]
-        vec_col = [
-            f.name
-            for f in rows.schema.fields
-            if "array" in f.dataType.simpleString()
-            and f.name != "pq_code"
-        ][0]
-        _write_batch_keyed(
-            rows.groupBy(id_col)
-            .agg(
-                F.max_by(
-                    F.struct("pq_code", vec_col, "qerr", "ivf_cell"),
-                    "batch",
-                ).alias("w")
-            )
-            .select(
-                F.col(id_col),
-                F.col("w.pq_code").alias("pq_code"),
-                F.col(f"w.{vec_col}").alias(vec_col),
-                F.col("w.qerr").alias("qerr"),
-                F.lit(0).cast("bigint").alias("batch"),
-                F.col("w.ivf_cell").alias("ivf_cell"),
-            ),
-            f"{vdir}/rows",
-            ("batch", "ivf_cell"),
-        )
-        folded = spark.read.parquet(f"{vdir}/rows")
-        st = folded.agg(
-            F.min(F.col(id_col)).alias("min_id"),
-            F.max(F.col(id_col)).alias("max_id"),
-            F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-            F.avg("qerr").alias("mean_qerr"),
-        ).collect()[0]
-        fit = float(meta.collect()[0]["fit_mean_qerr"])
-        mq = float(st["mean_qerr"] or 0.0)
-        # folded batch-0 drift row so post-compaction appends keep
-        # the drift protocol working (the ivf_index_compact shape)
-        _write_batch_keyed(
-            spark.createDataFrame(
-                [(0, int(st["n_rows"]), mq, mq / fit if fit > 0 else 1.0)],
-                "batch bigint, n_rows bigint, mean_qerr double,"
-                " drift_ratio double",
-            ),
-            f"{vdir}/drift",
-            ("batch",),
-        )
-        # agg-then-withColumn (the _sq8_write_manifest discipline):
-        # a positional tuple would misalign against the read-back
-        # schema's trailing batch partition column
-        _write_batch_keyed(
-            spark.createDataFrame(
-                [(st["min_id"], st["max_id"], int(st["n_rows"]))],
-                f"min_id {folded.schema[id_col].dataType.simpleString()},"
-                f" max_id {folded.schema[id_col].dataType.simpleString()},"
-                " n_rows bigint",
-            ).withColumn("batch", F.lit(0).cast("bigint")),
-            f"{vdir}/rows_manifest",
-            ("batch",),
-        )
-
-    return publish_version(spark, dst_path, build)
 
 
 def ivfpq_drift_report(
@@ -1351,8 +1202,6 @@ def ivfpq_drift_report(
     ``refit_threshold ×`` the creation batch's — a RECALL alert, not
     a correctness gate (the probe's exact re-rank keeps returned
     distances true while coarse candidate quality drifts)."""
-    from pyspark.errors import AnalysisException
-
     if live not in ("full", "sample", "off"):
         raise ValueError(f"unknown live mode {live!r}")
     fit = float(
@@ -1360,15 +1209,7 @@ def ivfpq_drift_report(
             "fit_mean_qerr"
         ]
     )
-    try:
-        log = [
-            r.asDict()
-            for r in spark.read.parquet(f"{index_path}/drift")
-            .orderBy("batch")
-            .collect()
-        ]
-    except AnalysisException:
-        log = []
+    log = drift_log(spark, index_path)
     if live == "off":
         n = sum(int(r["n_rows"]) for r in log)
         mean_qerr = (
@@ -1382,7 +1223,7 @@ def ivfpq_drift_report(
             rows = rows.sample(fraction=sample_fraction, seed=SEED)
         st = rows.agg(F.avg("qerr").alias("m")).collect()[0]
         mean_qerr = float(st["m"] or 0.0)
-    ratio = mean_qerr / fit if fit > 0 else 1.0
+    ratio = drift_ratio(mean_qerr, fit)
     return {
         "fit_mean_qerr": fit,
         "live_mean_qerr": mean_qerr,
@@ -1400,47 +1241,23 @@ def ivfpq_index_refit(
     n_codes: int | None = None,
     n_cells: int | None = None,
 ) -> str:
-    """RE-FIT a drifted IVF-PQ index: retrain BOTH quantizers over
-    the folded at-rest vectors (latest row per id), re-assign and
-    re-encode everything, and publish as the next serving version —
-    resets the drift baseline (fresh ``fit_mean_qerr``). ``None``
-    keeps the stored quantizer shape. Crash contract:
-    :func:`..sources.writers.publish_version`; the source deltas are
-    untouched."""
-    from ..sources.writers import publish_version
-
+    """RE-FIT a drifted IVF-PQ index (:func:`.lifecycle.refit`):
+    retrain BOTH quantizers over the folded at-rest vectors (latest
+    row per id), re-assign and re-encode everything through
+    :func:`ivfpq_index_append`, and publish as the next serving
+    version — resets the drift baseline (fresh ``fit_mean_qerr``).
+    ``None`` keeps the stored quantizer shape; the OPQ flag is kept
+    as stored."""
     meta = spark.read.parquet(f"{src_path}/meta").collect()[0]
     m = int(meta["m"]) if m is None else m
     n_codes = int(meta["n_codes"]) if n_codes is None else n_codes
     n_cells = int(meta["n_cells"]) if n_cells is None else n_cells
     opq = bool(meta["opq"]) if "opq" in meta.__fields__ else False
-    rows = spark.read.parquet(f"{src_path}/rows")
-    id_col = [
-        f.name
-        for f in rows.schema.fields
-        if f.name not in ("ivf_cell", "batch", "qerr")
-        and "array" not in f.dataType.simpleString()
-    ][0]
-    vec_col = [
-        f.name
-        for f in rows.schema.fields
-        if "array" in f.dataType.simpleString() and f.name != "pq_code"
-    ][0]
-    folded = rows.groupBy(id_col).agg(
-        F.max_by(vec_col, "batch").alias(vec_col)
+    return refit(
+        spark,
+        src_path,
+        dst_path,
+        lambda df, vdir, id_col, vec_col: ivfpq_index_append(
+            df, vdir, 0, m, n_codes, n_cells, id_col, vec_col, opq
+        ),
     )
-
-    def build(vdir: str) -> None:
-        ivfpq_index_append(
-            folded,
-            vdir,
-            0,
-            m=m,
-            n_codes=n_codes,
-            n_cells=n_cells,
-            id_col=id_col,
-            vec_col=vec_col,
-            opq=opq,
-        )
-
-    return publish_version(spark, dst_path, build)

@@ -38,14 +38,22 @@ surface (hard-negative mining, eval-retrieval, corpus audit by query).
 from __future__ import annotations
 
 import hashlib
-import json
 
 from pyspark.sql import DataFrame, Row, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, _parse_datatype_string
 
 from ..caching import claim_group, persist_into
+from ..sources.writers import publish_version
 from .dedup import spread_small_scan
+from .lifecycle import (
+    _batch_ids,
+    _batches_disjoint,
+    _literal_frame,
+    _metadata_rows,
+    _write_batch_keyed,
+    append_batch,
+    path_exists,
+)
 from .text import tokens
 
 #: partition-prefix width of the at-rest postings layout: first byte of
@@ -106,7 +114,7 @@ def _bm25_overlap_guard(
         raise ValueError(f"unknown on_overlap {on_overlap!r}")
     if on_overlap == "ignore":
         return
-    if not _manifest_exists(spark, f"{index_path}/manifest"):
+    if not path_exists(spark, f"{index_path}/manifest"):
         return
     # _batches_disjoint short-circuits True on <=1 live batches, so no
     # separate _n_batches pre-check (one listStatus, not two)
@@ -332,58 +340,6 @@ def bm25_hard_negatives(
     return _rank_topk(neg, k)
 
 
-def _write_batch_keyed(df: DataFrame, out_path: str, partition_cols) -> None:
-    """The one writer of every at-rest index tree.
-
-    Rows are rebalanced on the tree's partition columns when the
-    layout has a level below ``batch`` (``pfx``, ``dpfx``,
-    ``ivf_cell``, ``t/bucket``). Without it every upstream task writes
-    its own file into every leaf it holds rows for — from four
-    upstream tasks, one 100-document BM25 append landed 125 postings
-    files in 32 ``pfx=`` leaves. Hashing on the partition columns
-    routes each leaf's rows to one task, so a fixture-scale write
-    lands one file per leaf. It is AQE's rebalance, not a ``coalesce``
-    or a fixed ``repartition(n)``: small partitions merge and skewed
-    ones split to the advisory size, so files stay size-bounded at
-    100 TB. ``batch``-only trees (manifests, stats, drift rows, SQ8
-    rows) hold one leaf per write and stay unshuffled — the exchange
-    would be a pure extra job.
-
-    Dynamic partition overwrite replaces exactly the partitions being
-    written, so a crashed-and-replayed (or outright duplicated) append
-    of the same batch lands the identical bytes (the
-    streaming/lm_monitor batch-keyed idiom). The mode is a writer
-    option, never a session conf flip, so a shared session's conf is
-    never touched mid-write."""
-    if any(c != "batch" for c in partition_cols):
-        df = df.hint("rebalance", *partition_cols)
-    (
-        df.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(*partition_cols)
-        .parquet(out_path)
-    )
-
-
-def _literal_frame(spark: SparkSession, rows, ddl: str) -> DataFrame:
-    """``rows`` (tuples in the column order of ``ddl``) as a frame
-    planned entirely in the JVM, for index metadata rows and probe
-    query tables. ``createDataFrame`` of a Python list is a Python RDD:
-    every scan of it starts a Python worker in each of its
-    default-parallelism tasks, about 0.3 s per one-row metadata write
-    at fixture scale. Here the rows travel as one JSON string literal
-    that ``from_json`` parses on a one-partition range, with the same
-    nullable schema. Only for types JSON carries exactly (integers,
-    strings, doubles, booleans and arrays of them); Python's float
-    repr round-trips through the parser bit for bit."""
-    schema = _parse_datatype_string(ddl)
-    names = schema.fieldNames()
-    payload = json.dumps([dict(zip(names, r)) for r in rows])
-    return spark.range(0, 1, 1, 1).select(
-        F.inline(F.from_json(F.lit(payload), ArrayType(schema)))
-    )
-
-
 def bm25_index_append(
     docs: DataFrame,
     path: str,
@@ -401,8 +357,9 @@ def bm25_index_append(
     The crawl-loop contract: per-batch cost is O(batch) — nothing
     already at rest is read or rewritten (document frequency and the
     corpus scalars are additive over disjoint batches, so they land as
-    batch-keyed deltas the probe sums at vocabulary size). Dynamic
-    partition overwrite makes a replayed batch idempotent.
+    batch-keyed deltas the probe sums at vocabulary size). The batch
+    lands through :func:`.lifecycle.append_batch`, so a replayed batch
+    replaces its previous delivery.
     Denormalizing dl is the classic search-engine doc-values trick: a
     probe joins nothing corpus-sized — it reads only the partitions of
     its query terms (partition pruning on ``pfx``), sums and
@@ -457,57 +414,8 @@ def bm25_index_append(
         .agg(F.count(F.lit(1)).cast("bigint").alias("tf")),
     )
     batch = F.lit(batch_id).cast("bigint")
-    # fail-closed replay: manifest row first, then the batch dirs —
-    # a different-content replay must REPLACE, not merge (dynamic
-    # overwrite only swaps the pfx= leaves present in the new data)
-    _drop_manifest_row(docs.sparkSession, f"{path}/manifest", batch_id)
-    _drop_batch_dirs(
-        docs.sparkSession,
-        batch_id,
-        f"{path}/postings",
-        f"{path}/termstats",
-        f"{path}/stats",
-        f"{path}/docterms",
-    )
-    _write_batch_keyed(
-        tf.withColumn("batch", batch).withColumn(
-            "pfx", F.substring(F.md5("token"), 1, _PFX_LEN)
-        ),
-        f"{path}/postings",
-        ("batch", "pfx"),
-    )
-    _write_batch_keyed(
-        tf.groupBy("token")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("df"))
-        .withColumn("batch", batch),
-        f"{path}/termstats",
-        ("batch",),
-    )
-    _write_batch_keyed(
-        tok.agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-            F.sum(F.array_size("t")).cast("bigint").alias("sum_dl"),
-        ).withColumn("batch", batch),
-        f"{path}/stats",
-        ("batch",),
-    )
-    if forward_index:
-        _write_batch_keyed(
-            tf.select("doc_id", "token")
-            .withColumn("batch", batch)
-            .withColumn(
-                "dpfx",
-                F.substring(
-                    F.md5(F.col("doc_id").cast("string")), 1, _PFX_LEN
-                ),
-            ),
-            f"{path}/docterms",
-            ("batch", "dpfx"),
-        )
-    mm = _doc_range(tok)
-    for c in caches:
-        c.unpersist()
     spark = docs.sparkSession
+    mm = _doc_range(tok)
     # None on the first append / a pre-manifest tree
     others = [
         r
@@ -520,7 +428,52 @@ def bm25_index_append(
         and int(r["min_doc_id"]) <= mm["max_doc_id"]
         for r in others
     )
-    _write_doc_manifest(spark, f"{path}/manifest", batch_id, mm)
+    append_batch(
+        spark,
+        path,
+        batch_id,
+        {
+            "postings": (
+                tf.withColumn("batch", batch).withColumn(
+                    "pfx", F.substring(F.md5("token"), 1, _PFX_LEN)
+                ),
+                ("batch", "pfx"),
+            ),
+            "termstats": (
+                tf.groupBy("token")
+                .agg(F.count(F.lit(1)).cast("bigint").alias("df"))
+                .withColumn("batch", batch),
+                ("batch",),
+            ),
+            "stats": (
+                tok.agg(
+                    F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+                    F.sum(F.array_size("t")).cast("bigint").alias("sum_dl"),
+                ).withColumn("batch", batch),
+                ("batch",),
+            ),
+            # listed without the forward index too: the replay then
+            # drops the batch's old docterms (a true replacement)
+            "docterms": (
+                (
+                    tf.select("doc_id", "token")
+                    .withColumn("batch", batch)
+                    .withColumn(
+                        "dpfx",
+                        F.substring(
+                            F.md5(F.col("doc_id").cast("string")), 1, _PFX_LEN
+                        ),
+                    ),
+                    ("batch", "dpfx"),
+                )
+                if forward_index
+                else None
+            ),
+        },
+        ("manifest", _doc_manifest(spark, batch_id, mm)),
+    )
+    for c in caches:
+        c.unpersist()
     return {
         "batch": int(batch_id),
         "n_docs": int(mm["n_docs"]),
@@ -844,8 +797,8 @@ def positional_index_append(
     """Append one document batch of positional postings — one
     (token, doc_id, pos) row per token OCCURRENCE under
     ``batch=<id>/pfx=<md5 byte>`` (the bm25_index_append layout and
-    contract: O(batch) appends, nothing at rest re-read, dynamic
-    partition overwrite makes a replayed batch idempotent; positions
+    contract: O(batch) appends, nothing at rest re-read, landed
+    through :func:`.lifecycle.append_batch`; positions
     are per-document, so no cross-batch statistics exist to
     maintain). Positions are what phrase and proximity queries
     consume; a probe reads only its query tokens' partitions across
@@ -873,12 +826,13 @@ def positional_index_append(
         F.lit(batch_id).cast("bigint").alias("batch"),
         F.substring(F.md5("token"), 1, _PFX_LEN).alias("pfx"),
     )
-    # fail-closed replay: manifest row first, then the batch dir —
-    # a different-content replay must replace the pfx= leaves too
-    _drop_manifest_row(spark, f"{path}/manifest", batch_id)
-    _drop_batch_dirs(spark, batch_id, f"{path}/postings_pos")
-    _write_batch_keyed(posted, f"{path}/postings_pos", ("batch", "pfx"))
-    _write_doc_manifest(spark, f"{path}/manifest", batch_id, _doc_range(t))
+    append_batch(
+        spark,
+        path,
+        batch_id,
+        {"postings_pos": (posted, ("batch", "pfx"))},
+        ("manifest", _doc_manifest(spark, batch_id, _doc_range(t))),
+    )
 
 
 def positional_index_write(
@@ -922,8 +876,6 @@ def positional_index_compact(
     previous version survives as rollback, and the SOURCE deltas are
     never touched (append cadence continues; the next compaction
     folds the new deltas)."""
-    from ..sources.writers import publish_version
-
     def build(vdir: str) -> None:
         src = spark.read.schema(
             "token string, doc_id bigint, pos bigint, batch bigint,"
@@ -949,8 +901,10 @@ def positional_index_compact(
         )
         # fresh batch-0 manifest so appends AFTER this compaction can
         # still prove disjointness against the folded history
-        _write_doc_manifest(
-            spark, f"{vdir}/manifest", 0, _compacted_range(src)
+        _write_batch_keyed(
+            _doc_manifest(spark, 0, _compacted_range(src)),
+            f"{vdir}/manifest",
+            ("batch",),
         )
 
     return publish_version(spark, dst_path, build)
@@ -970,60 +924,6 @@ def positional_index_compact(
 _SET_STRATEGY_MIN = 9
 
 
-def _batch_ids(spark: SparkSession, path: str) -> list[int]:
-    """The ``batch=`` delta partition ids under an index subtree —
-    one driver-side listStatus (the compaction_cost_model pattern)."""
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(path)
-    fs = root.getFileSystem(hconf)
-    return [
-        int(st.getPath().getName()[len("batch="):])
-        for st in fs.listStatus(root)
-        if st.isDirectory() and st.getPath().getName().startswith("batch=")
-    ]
-
-
-def _batches_disjoint(
-    spark: SparkSession,
-    tree_path: str,
-    manifest_path: str,
-    min_col: str,
-    max_col: str,
-    n_col: str,
-    schema: str | None = None,
-) -> bool:
-    """Whether a batch-keyed delta tree's per-batch id ranges are
-    PAIRWISE DISJOINT according to its manifest — the proof that no
-    id landed under two batches, so id-keyed dedup/fold passes can be
-    skipped. Any live batch missing from the manifest (a pre-manifest
-    tree) or any range overlap returns False: the manifest is a
-    fast-path marker, never a correctness input. Ranges compare in
-    the id column's OWN type (numeric ids as numbers, string ids
-    lexicographically) — a shared id sits inside both batches' ranges
-    under any total order, so disjoint ranges exclude it either way.
-    Driver cost is one listStatus plus a batches-sized parquet
-    read; ``schema`` is the manifest's read schema where the writer
-    fixes it (see :func:`_metadata_rows`)."""
-    live = _batch_ids(spark, tree_path)
-    if len(live) <= 1:
-        return True
-    rows = _metadata_rows(spark, manifest_path, schema)
-    if rows is None:
-        return False
-    by_batch = {int(r["batch"]): r for r in rows}
-    if not set(live) <= set(by_batch):
-        return False  # some delta predates the manifest: assume overlap
-    ranges = sorted(
-        (by_batch[b][min_col], by_batch[b][max_col])
-        for b in live
-        if int(by_batch[b][n_col]) > 0
-    )
-    return all(
-        ranges[i][0] > ranges[i - 1][1] for i in range(1, len(ranges))
-    )
-
-
 def _doc_batches_disjoint(
     spark: SparkSession, index_path: str, tree: str
 ) -> bool:
@@ -1038,24 +938,6 @@ def _doc_batches_disjoint(
         "n_docs",
         _DOC_MANIFEST,
     )
-
-
-def _metadata_rows(
-    spark: SparkSession, path: str, schema: str | None = None
-) -> list[Row] | None:
-    """The rows of a small index metadata tree (a batch manifest, a
-    quantizer ``meta``), or None when the tree is missing or holds no
-    rows. Pass ``schema`` where the writer fixes the types
-    (:data:`_DOC_MANIFEST`, the SQ8 ``meta``): an unschema'd read runs
-    a one-task schema-inference job first. Vector manifests keep the
-    inferred read — their id range has the caller's id type."""
-    from pyspark.errors import AnalysisException
-
-    reader = spark.read if schema is None else spark.read.schema(schema)
-    try:
-        return reader.parquet(path).collect() or None
-    except AnalysisException:
-        return None
 
 
 def _doc_range(t: DataFrame) -> Row:
@@ -1078,106 +960,22 @@ def _compacted_range(postings: DataFrame) -> Row:
     ).collect()[0]
 
 
-def _write_doc_manifest(
-    spark: SparkSession, manifest_path: str, batch_id: int, mm: Row
-) -> None:
-    """Land one batch's doc-id manifest row from ``mm`` (min_doc_id,
+def _doc_manifest(spark: SparkSession, batch_id: int, mm: Row) -> DataFrame:
+    """One batch's doc-id manifest row from ``mm`` (min_doc_id,
     max_doc_id, n_docs); an empty batch records the range (0, -1)."""
     n = int(mm["n_docs"])
-    _write_batch_keyed(
-        _literal_frame(
-            spark,
-            [
-                (
-                    int(mm["min_doc_id"]) if n else 0,
-                    int(mm["max_doc_id"]) if n else -1,
-                    n,
-                    int(batch_id),
-                )
-            ],
-            _DOC_MANIFEST,
-        ),
-        manifest_path,
-        ("batch",),
+    return _literal_frame(
+        spark,
+        [
+            (
+                int(mm["min_doc_id"]) if n else 0,
+                int(mm["max_doc_id"]) if n else -1,
+                n,
+                int(batch_id),
+            )
+        ],
+        _DOC_MANIFEST,
     )
-
-
-def _manifest_exists(spark: SparkSession, manifest_path: str) -> bool:
-    """Whether a batch manifest tree exists at all — distinguishes
-    'no overlap report available' (pre-manifest trees keep historical
-    behavior) from 'manifest says maybe-overlap'."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(manifest_path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(p))
-
-
-def _drop_manifest_row(
-    spark: SparkSession, manifest_path: str, batch_id: int
-) -> None:
-    """Invalidate one batch's manifest row BEFORE its rows are
-    rewritten (ADVICE r14): appends write rows first and the manifest
-    after, so a batch RE-delivered with a different id range whose
-    job crashes between the two writes would otherwise leave the
-    STALE range on record — possibly 'proving' batches disjoint over
-    rows that now overlap. Deleting the row first fails closed: an
-    interrupted replay yields 'live batch missing from manifest', so
-    :func:`_batches_disjoint` returns False and every consumer runs
-    its fold/dedup/guard until the append is replayed to completion.
-    No-op when the row (or the manifest tree) does not exist yet.
-
-    Callers pair this with :func:`_drop_batch_dirs` — the manifest
-    row alone is not enough for a replay that COMPLETES with a
-    different id set (see there)."""
-    _drop_batch_dirs(spark, batch_id, manifest_path)
-
-
-def _drop_batch_dirs(
-    spark: SparkSession, batch_id: int, *tree_paths: str
-) -> None:
-    """Delete each tree's ``batch=<id>`` directory before an append
-    rewrites that batch (round-15 review): dynamic partition
-    overwrite replaces only the LEAF partitions present in the new
-    data, so on a multi-level layout (``batch=/pfx=``,
-    ``batch=/ivf_cell=``, ``batch=/t=/bucket=``) a batch re-delivered
-    with a DIFFERENT id/content set would keep its old rows in the
-    sub-partitions the new delivery doesn't touch — alongside a fresh
-    manifest row whose range then falsely 'proves' the stale rows
-    away. Deleting the whole batch dir first makes a completed replay
-    a true replacement (and covers the empty-re-delivery edge on
-    single-level trees, where a zero-row write replaces nothing).
-    Ordering contract: callers drop the manifest row FIRST, then the
-    row dirs, then write rows, then the manifest — a crash anywhere
-    in that sequence leaves the batch missing from the manifest, so
-    :func:`_batches_disjoint` returns False and every consumer runs
-    its fold/dedup/guard. The honest width of the window (round-15
-    review): a crash BETWEEN the deletes and the rows write leaves
-    the batch's rows absent entirely until the feed replays it —
-    probes serve the index without that batch (loudly, with a read
-    error, if it was the only batch). That is the fail-closed trade
-    taken deliberately: the alternative (write first, diff-and-delete
-    stale leaves after) would serve SUPERSEDED rows through its crash
-    window and needs a leaf-diff the filesystem can't give atomically.
-    At-least-once delivery converges either way on replay.
-
-    No-op on paths that do not exist yet. A ``tree_paths`` entry
-    containing ``*`` is treated as a Hadoop glob (the semantic
-    index's cell-first ``rows/ivf_cell=*`` layout, where ``batch=``
-    is not the outermost level); all other paths are deleted
-    LITERALLY — globStatus would otherwise misread legitimate
-    ``[...]``/``{...}`` characters in a caller's path as pattern
-    syntax and silently skip (or over-match) the delete."""
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    for tp in tree_paths:
-        p = jvm.org.apache.hadoop.fs.Path(f"{tp}/batch={int(batch_id)}")
-        fs = p.getFileSystem(hconf)
-        if "*" in tp:
-            matches = fs.globStatus(p)
-            for st in matches or []:
-                fs.delete(st.getPath(), True)
-        elif fs.exists(p):
-            fs.delete(p, True)
 
 
 def _require_docterms_coverage(spark: SparkSession, index_path: str) -> None:
@@ -1198,7 +996,7 @@ def _require_docterms_coverage(spark: SparkSession, index_path: str) -> None:
         live &= {int(r["batch"]) for r in rows if int(r["n_docs"]) > 0}
     covered = (
         set(_batch_ids(spark, f"{index_path}/docterms"))
-        if _manifest_exists(spark, f"{index_path}/docterms")
+        if path_exists(spark, f"{index_path}/docterms")
         else set()
     )
     missing = sorted(live - covered)
@@ -1954,8 +1752,6 @@ def bm25_index_compact(
     (``maybe_overlap`` ranges; provably-disjoint or pre-manifest
     trees keep the bit-identical additive fold); ``'always'`` /
     ``'never'`` force either arm."""
-    from ..sources.writers import publish_version
-
     if repair not in ("auto", "always", "never"):
         raise ValueError(f"unknown repair {repair!r}")
     do_repair = repair == "always" or (
@@ -1963,7 +1759,7 @@ def bm25_index_compact(
         and not _doc_batches_disjoint(spark, src_path, "postings")
         # pre-manifest trees keep the historical additive fold: with
         # no manifest at all there is no overlap REPORT to act on
-        and _manifest_exists(spark, f"{src_path}/manifest")
+        and path_exists(spark, f"{src_path}/manifest")
     )
 
     def build(vdir: str) -> None:
@@ -2052,8 +1848,10 @@ def bm25_index_compact(
             )
         # fresh batch-0 manifest (from the written postings) so
         # post-compaction appends keep the overlap protocol working
-        _write_doc_manifest(
-            spark, f"{vdir}/manifest", 0, _compacted_range(folded)
+        _write_batch_keyed(
+            _doc_manifest(spark, 0, _compacted_range(folded)),
+            f"{vdir}/manifest",
+            ("batch",),
         )
 
     return publish_version(spark, dst_path, build)

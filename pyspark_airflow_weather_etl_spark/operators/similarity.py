@@ -27,13 +27,26 @@ from pyspark.sql import functions as F
 
 from ..caching import claim_group, persist_into
 from ..functions.vectors import cosine_similarity, dot, l2_norm, pair_dot_arrow
-from .retrieval import (
-    _batches_disjoint,
+from .lifecycle import (
     _drop_batch_dirs,
-    _drop_manifest_row,
     _literal_frame,
     _metadata_rows,
     _write_batch_keyed,
+    append_batch,
+    as_stored,
+    compact_rows,
+    drift_log,
+    drift_ratio,
+    drift_row,
+    fold_latest,
+    frozen_meta,
+    id_range,
+    path_exists,
+    refit,
+    rows_disjoint,
+    rows_manifest,
+    vector_col,
+    write_literal,
 )
 
 SEED = 42
@@ -207,11 +220,10 @@ def sq8_index_append(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> dict:
-    """Append one vector batch to an SQ8 index — the
-    :func:`..operators.retrieval.bm25_index_append` lifecycle applied
-    to the scalar-quantized family: O(batch) work per crawl
-    increment, nothing at rest re-read, batch-keyed dynamic partition
-    overwrite so a replayed batch lands identical bytes.
+    """Append one vector batch to an SQ8 index — O(batch) work per
+    crawl increment, landed through the lifecycle kernel
+    (:func:`.lifecycle.append_batch`: fail-closed manifest, replay is
+    replacement).
 
     Quantizer params are FROZEN at index creation (batch 0 trains
     them; every later batch encodes with the stored min/scale) —
@@ -223,72 +235,27 @@ def sq8_index_append(
     values that clamped — as the re-fit signal (a monitoring pipeline
     alerts past a few percent and schedules a full rebuild; the
     probe stays correct meanwhile because the exact re-rank uses raw
-    vectors, only coarse RECALL degrades).
+    vectors, only coarse RECALL degrades). The same figures land as
+    the batch's ``drift`` row, the log :func:`sq8_drift_report`
+    reads.
 
     Returns {"batch", "n_rows", "n_values", "clamped_frac"}."""
-    from pyspark.errors import AnalysisException
-
     spark = embeddings.sparkSession
     params = _sq8_meta(spark, path, missing_ok=True)
-    try:
-        # normalize the incoming batch to the index's stored column
-        # types (one footer read): a crawl feed that switches float →
-        # double mid-stream would otherwise write a mixed-type parquet
-        # tree that FAILS at probe time with a column-convert error
-        stored = params and spark.read.parquet(f"{path}/rows").schema
-    except AnalysisException:
-        stored = None
-    if stored is not None:
-        mn, sc = params
-        embeddings = embeddings.select(
-            F.col(id_col).cast(stored[id_col].dataType),
-            F.col(vec_col).cast(stored[vec_col].dataType),
-        )
-    else:
+    embeddings = as_stored(embeddings, path, id_col, vec_col)
+    if params is None:
         d = len(embeddings.select(vec_col).first()[0])
-        mn, sc = _sq8_params(embeddings, d, vec_col)
-        _literal_frame(spark, [(mn, sc)], _SQ8_META).write.mode(
-            "overwrite"
-        ).parquet(f"{path}/meta")
+        params = _sq8_params(embeddings, d, vec_col)
+        write_literal(spark, f"{path}/meta", [params], _SQ8_META)
+    mn, sc = params
     raw = _sq8_unclamped(vec_col, mn, sc)
     guard = embeddings.agg(
-        F.count(F.lit(1)).alias("n_rows"),
+        *id_range(id_col),
         F.sum(F.size(F.col(vec_col))).alias("n_values"),
         F.sum(
             F.size(F.filter(raw, lambda c: (c < 0) | (c > 255)))
         ).alias("n_clamped"),
     ).collect()[0]
-    # fail-closed replay: manifest row first, then the batch dir —
-    # also covers the empty-re-delivery edge (a zero-row dynamic
-    # overwrite replaces nothing)
-    _drop_manifest_row(spark, f"{path}/rows_manifest", batch_id)
-    _drop_batch_dirs(spark, batch_id, f"{path}/rows")
-    _write_batch_keyed(
-        embeddings.select(
-            F.col(id_col),
-            F.transform(
-                _sq8_codes(vec_col, mn, sc), lambda v: v.cast("smallint")
-            ).alias("code"),
-            F.col(vec_col),
-            F.lit(batch_id).cast("bigint").alias("batch"),
-        ),
-        f"{path}/rows",
-        ("batch",),
-    )
-    # per-batch id-range manifest (the positional_index_append marker
-    # applied to vectors): when every batch's vec_id range is pairwise
-    # disjoint — the append-only crawl common case — the at-rest probe
-    # skips its index-sized latest-wins fold entirely. Written as a
-    # direct agg so the id keeps its OWN column type across batches.
-    _write_batch_keyed(
-        embeddings.agg(
-            F.min(F.col(id_col)).alias("min_id"),
-            F.max(F.col(id_col)).alias("max_id"),
-            F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-        ).withColumn("batch", F.lit(batch_id).cast("bigint")),
-        f"{path}/rows_manifest",
-        ("batch",),
-    )
     n_values = int(guard["n_values"] or 0)
     rep = {
         "batch": batch_id,
@@ -298,25 +265,41 @@ def sq8_index_append(
             int(guard["n_clamped"] or 0) / n_values if n_values else 0.0
         ),
     }
-    # append-only drift log — sq8_drift_report's per-batch history for
-    # batch AND streaming pipelines alike (batch-keyed dynamic
-    # overwrite keeps a replayed batch from double-logging)
-    _write_batch_keyed(
-        _literal_frame(
-            spark,
-            [
-                (
-                    int(rep["batch"]),
-                    int(rep["n_rows"]),
-                    int(rep["n_values"]),
-                    float(rep["clamped_frac"]),
-                )
-            ],
-            "batch bigint, n_rows bigint, n_values bigint,"
-            " clamped_frac double",
-        ),
-        f"{path}/drift",
-        ("batch",),
+    append_batch(
+        spark,
+        path,
+        batch_id,
+        {
+            "rows": (
+                embeddings.select(
+                    F.col(id_col),
+                    F.transform(
+                        _sq8_codes(vec_col, mn, sc),
+                        lambda v: v.cast("smallint"),
+                    ).alias("code"),
+                    F.col(vec_col),
+                    F.lit(batch_id).cast("bigint").alias("batch"),
+                ),
+                ("batch",),
+            ),
+            "drift": (
+                _literal_frame(
+                    spark,
+                    [
+                        (
+                            int(batch_id),
+                            rep["n_rows"],
+                            n_values,
+                            float(rep["clamped_frac"]),
+                        )
+                    ],
+                    "batch bigint, n_rows bigint, n_values bigint,"
+                    " clamped_frac double",
+                ),
+                ("batch",),
+            ),
+        },
+        rows_manifest(embeddings, id_col, batch_id, guard),
     )
     return rep
 
@@ -365,20 +348,10 @@ def sq8_drift_report(
       vectors and the log is complete; :func:`sq8_drift_backfill`
       synthesizes the log for pre-log indexes).
     """
-    from pyspark.errors import AnalysisException
-
     if live not in ("full", "sample", "off"):
         raise ValueError(f"unknown live mode {live!r}")
     mn, sc = _sq8_meta(spark, index_path)
-    try:
-        log = [
-            r.asDict()
-            for r in spark.read.parquet(f"{index_path}/drift")
-            .orderBy("batch")
-            .collect()
-        ]
-    except AnalysisException:
-        log = []
+    log = drift_log(spark, index_path)
     stderr = None
     if live == "off":
         n_values = sum(int(r["n_values"]) for r in log)
@@ -392,13 +365,7 @@ def sq8_drift_report(
         rows = spark.read.parquet(f"{index_path}/rows")
         if live == "sample":
             rows = rows.sample(fraction=sample_fraction, seed=SEED)
-        vec_col = [
-            f.name
-            for f in rows.schema.fields
-            if f.name not in ("code", "batch")
-            and "array" in f.dataType.simpleString()
-            and "smallint" not in f.dataType.simpleString()
-        ][0]
+        vec_col = vector_col(rows)
         raw = _sq8_unclamped(vec_col, mn, sc)
         cnt = rows.agg(
             F.sum(F.size(F.col(vec_col))).alias("n_values"),
@@ -437,13 +404,7 @@ def sq8_drift_backfill(spark, index_path: str) -> int:
     Returns the number of batch rows written."""
     mn, sc = _sq8_meta(spark, index_path)
     rows = spark.read.parquet(f"{index_path}/rows")
-    vec_col = [
-        f.name
-        for f in rows.schema.fields
-        if f.name not in ("code", "batch")
-        and "array" in f.dataType.simpleString()
-        and "smallint" not in f.dataType.simpleString()
-    ][0]
+    vec_col = vector_col(rows)
     raw = _sq8_unclamped(vec_col, mn, sc)
     per_batch = (
         rows.groupBy("batch")
@@ -470,118 +431,33 @@ def sq8_drift_backfill(spark, index_path: str) -> int:
 
 
 def sq8_index_refit(spark, src_path: str, dst_path: str) -> str:
-    """RE-FIT an SQ8 index whose frozen quantizer has drifted: train
-    fresh per-dimension min/scale over ALL at-rest vectors (the raw
-    column is stored precisely so a re-fit never touches the source
-    corpus), re-encode every code, and publish as the next serving
-    version under ``dst_path`` — the publish_version crash contract
-    (pointer flips last, previous version is rollback, source deltas
-    untouched). The refit resets every batch's clamped fraction to
-    zero by construction; pair with :func:`sq8_drift_report` for the
-    WHEN (alert past a few percent live clamp)."""
-    from ..sources.writers import publish_version
-
-    rows = spark.read.parquet(f"{src_path}/rows")
-    id_col, vec_col = [
-        f.name
-        for f in rows.schema.fields
-        if f.name not in ("code", "batch")
-    ]
-    if "array" not in rows.schema[vec_col].dataType.simpleString():
-        id_col, vec_col = vec_col, id_col
-    # a vec_id re-delivered under a later batch= folds to its LATEST
-    # vector BEFORE the refit trains — the output is single-batch,
-    # which downstream probes trust to be duplicate-free (ADVICE r13)
-    rows = rows.groupBy(id_col).agg(
-        F.max_by(vec_col, "batch").alias(vec_col)
+    """RE-FIT an SQ8 index whose frozen quantizer has drifted
+    (:func:`.lifecycle.refit`): fresh per-dimension min/scale trained
+    over the latest at-rest vector per id, every code re-encoded by
+    :func:`sq8_index_append` as batch 0 of the next serving version
+    under ``dst_path``. The refit resets the clamped fraction to zero
+    by construction (its batch-0 drift row says so); pair with
+    :func:`sq8_drift_report` for the WHEN (alert past a few percent
+    live clamp)."""
+    return refit(
+        spark,
+        src_path,
+        dst_path,
+        lambda df, vdir, id_col, vec_col: sq8_index_append(
+            df, vdir, 0, id_col, vec_col
+        ),
     )
-    d = len(rows.select(vec_col).first()[0])
-    mn, sc = _sq8_params(rows, d, vec_col)
-
-    def build(vdir: str) -> None:
-        _literal_frame(spark, [(mn, sc)], _SQ8_META).write.mode(
-            "overwrite"
-        ).parquet(f"{vdir}/meta")
-        _write_batch_keyed(
-            rows.select(
-                F.col(id_col),
-                F.transform(
-                    _sq8_codes(vec_col, mn, sc),
-                    lambda v: v.cast("smallint"),
-                ).alias("code"),
-                F.col(vec_col),
-                F.lit(0).cast("bigint").alias("batch"),
-            ),
-            f"{vdir}/rows",
-            ("batch",),
-        )
-        _sq8_write_manifest(spark, vdir, id_col)
-
-    return publish_version(spark, dst_path, build)
 
 
 def sq8_index_compact(spark, src_path: str, dst_path: str) -> str:
     """Compact an SQ8 delta tree (one ``batch=`` partition per
     append) into a single-batch index published as the next serving
-    version under ``dst_path`` — the
-    :func:`..operators.retrieval.positional_index_compact` economics:
+    version under ``dst_path`` (:func:`.lifecycle.compact_rows`):
     codes are per-vector facts with no cross-batch statistics, so
-    compaction is a re-partition that kills the per-delta file-open
-    tax, probe results bit-identical by construction. The frozen
-    quantizer ``meta`` is copied verbatim (it IS the index identity —
-    recomputing it here would re-code nothing-at-rest). A vec_id
-    re-delivered under a later ``batch=`` folds to its LATEST row
-    here (the :func:`positional_index_compact` duplicate-fold applied
-    to vectors — the compacted tree is single-batch, exactly the
-    shape :func:`sq8_topk_at_rest` trusts to be duplicate-free;
-    ADVICE round 13). Crash contract: publish_version (build in an
-    unreferenced v-dir, flip ``_current`` last, previous version is
-    rollback)."""
-    from ..sources.writers import publish_version
-
-    meta = spark.read.parquet(f"{src_path}/meta")
-
-    def build(vdir: str) -> None:
-        meta.coalesce(1).write.mode("overwrite").parquet(f"{vdir}/meta")
-        rows = spark.read.parquet(f"{src_path}/rows")
-        id_col = [
-            f.name
-            for f in rows.schema.fields
-            if f.name not in ("code", "batch")
-            and "array" not in f.dataType.simpleString()
-        ][0]
-        others = [
-            f.name for f in rows.schema.fields
-            if f.name not in (id_col, "batch")
-        ]
-        _write_batch_keyed(
-            rows.groupBy(id_col)
-            .agg(*[F.max_by(c, "batch").alias(c) for c in others])
-            .withColumn("batch", F.lit(0).cast("bigint")),
-            f"{vdir}/rows",
-            ("batch",),
-        )
-        _sq8_write_manifest(spark, vdir, id_col)
-
-    return publish_version(spark, dst_path, build)
-
-
-def _sq8_write_manifest(spark, vdir: str, id_col: str) -> None:
-    """Batch-0 ``rows_manifest`` for a freshly built single-batch SQ8
-    tree (compact/refit output) — a narrow id-column scan of the
-    just-written rows, so appends landing AFTER the rebuild can still
-    prove range disjointness against the folded history."""
-    _write_batch_keyed(
-        spark.read.parquet(f"{vdir}/rows")
-        .agg(
-            F.min(F.col(id_col)).alias("min_id"),
-            F.max(F.col(id_col)).alias("max_id"),
-            F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-        )
-        .withColumn("batch", F.lit(0).cast("bigint")),
-        f"{vdir}/rows_manifest",
-        ("batch",),
-    )
+    compaction is a latest-wins fold plus a re-partition that kills
+    the per-delta file-open tax; probe results are bit-identical and
+    the frozen quantizer ``meta`` is copied verbatim."""
+    return compact_rows(spark, src_path, dst_path, ("batch",))
 
 
 def sq8_index_write(
@@ -623,21 +499,11 @@ def sq8_topk_at_rest(
     scan (ReadSchema-asserted in tests/test_similarity.py) — and the
     top ``overfetch*k`` join back for the exact cosine re-rank.
 
-    Duplicate-id safety (ADVICE round 13, the positional-postings
-    threat model applied to vectors): a vec_id re-delivered under a
-    LATER ``batch=`` partition would otherwise appear twice in the
-    coarse ranking — duplicate ids in the top-k, displacing real
-    neighbors — so on a multi-batch tree both passes fold to one row
-    per id, LATEST batch wins (the upsert reading; codes are a pure
-    function of the vector, so a re-delivered unchanged vector folds
-    to identical bytes either way). The fold is PROVABLY skipped in
-    two duplicate-free shapes (the
-    :func:`..operators.retrieval._batches_disjoint` logic):
-    single-batch trees — one-shot builds or freshly compacted/refit
-    ones — and multi-batch trees whose per-append ``rows_manifest``
-    id ranges are pairwise disjoint (the append-only crawl case), so
-    the correctness fix costs nothing until a re-delivery actually
-    overlaps."""
+    Duplicate-id safety: on a multi-batch tree both passes fold to
+    one row per id, latest batch wins (:func:`.lifecycle.fold_latest`;
+    the re-rank fold runs over the overfetched candidates only), and
+    the fold is skipped wherever the manifest proves the batches
+    disjoint (:func:`.lifecycle.rows_disjoint`)."""
     mn, sc = _sq8_meta(spark, index_path)
     d = len(mn)
     qq = [
@@ -648,31 +514,10 @@ def sq8_topk_at_rest(
     # id / vector element types the source embeddings had (an index
     # built from array<double> vectors or a string id must probe the
     # same way it was written — ADVICE round 12). The ``batch=``
-    # partition column IS inferred here (the r13 writer partitions
-    # rows/ by batch), which is benign-by-construction for pruning —
-    # the coarse pass never selects it on a single-batch tree — and
-    # load-bearing for the multi-batch latest-wins fold below. Column
-    # pruning still holds: the coarse pass reads only (id, code[,
-    # batch]), ReadSchema-asserted in tests/test_similarity.py.
+    # partition column is inferred here and is what the fold keys on.
     rows = spark.read.parquet(f"{index_path}/rows")
-    # _batches_disjoint short-circuits True on <=1 live batches, so no
-    # separate _n_batches pre-check (one listStatus, not two)
-    multi_batch = not _batches_disjoint(
-        spark,
-        f"{index_path}/rows",
-        f"{index_path}/rows_manifest",
-        "min_id",
-        "max_id",
-        "n_rows",
-    )
+    disjoint = rows_disjoint(spark, index_path)
     qq_arr = F.array(*[F.lit(int(v)).cast("bigint") for v in qq])
-    coarse_src = rows.select(id_col, "code")
-    if multi_batch:
-        coarse_src = (
-            rows.select(id_col, "code", "batch")
-            .groupBy(id_col)
-            .agg(F.max_by("code", "batch").alias("code"))
-        )
     d2 = F.aggregate(
         F.zip_with(
             F.transform(F.col("code"), lambda c: c.cast("bigint")),
@@ -683,22 +528,20 @@ def sq8_topk_at_rest(
         lambda acc, v: acc + v,
     )
     coarse = (
-        coarse_src.select(F.col(id_col), d2.alias("__d2"))
+        fold_latest(rows, id_col, ["code"], disjoint)
+        .select(F.col(id_col), d2.alias("__d2"))
         .orderBy(F.col("__d2").asc(), F.col(id_col))
         .limit(int(overfetch * k))
     )
     qfull = F.array(*[F.lit(float(v)) for v in query_vec])
-    vec_side = rows.select(id_col, vec_col)
-    if multi_batch:
-        # overfetch*k rows at most survive the join — the fold here is
-        # candidate-sized, never index-sized
-        vec_side = (
-            rows.select(id_col, vec_col, "batch")
-            .join(F.broadcast(coarse.select(id_col)), id_col, "left_semi")
-            .groupBy(id_col)
-            .agg(F.max_by(vec_col, "batch").alias(vec_col))
-        )
-    rerank = coarse.join(vec_side, id_col).select(
+    vec_side = (
+        rows
+        if disjoint
+        else rows.join(F.broadcast(coarse.select(id_col)), id_col, "left_semi")
+    )
+    rerank = coarse.join(
+        fold_latest(vec_side, id_col, [vec_col], disjoint), id_col
+    ).select(
         F.col(id_col),
         F.round(cosine_similarity(F.col(vec_col), qfull), 6).alias("cosine"),
     )
@@ -979,28 +822,101 @@ def srp_topk_at_rest(
     return brute_force_topk(candidates, query_vec, k, id_col, vec_col)
 
 
-def _manifest_from_agg(src: DataFrame, id_col: str, batch_id: int):
-    """One-job per-batch ``rows_manifest``: aggregate the batch's id
-    range ONCE, collect the single row, and rebuild the manifest
-    frame from literals in the id column's OWN type (round-15 review:
-    writing the agg frame and then re-collecting it for the n_rows
-    return value was a second job over the same batch). Returns
-    ``(manifest_df, n_rows)``; an empty batch yields null min/max,
-    which :func:`..operators.retrieval._batches_disjoint` already
-    ignores via its ``n_rows > 0`` filter."""
-    spark = src.sparkSession
-    idt = src.schema[id_col].dataType.simpleString()
-    row = src.agg(
-        F.min(F.col(id_col)).alias("min_id"),
-        F.max(F.col(id_col)).alias("max_id"),
-        F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-    ).collect()[0]
-    n = int(row["n_rows"])
-    df = spark.createDataFrame(
-        [(int(batch_id), row["min_id"], row["max_id"], n)],
-        f"batch bigint, min_id {idt}, max_id {idt}, n_rows bigint",
+def _srp_append(
+    embeddings: DataFrame,
+    path: str,
+    batch_id: int,
+    kind: str,
+    params: dict,
+    sign,
+    id_col: str,
+    vec_col: str,
+) -> dict:
+    """The append both SRP quantizers share: freeze the plane identity
+    ``params`` in ``meta`` BEFORE any rows (a crash between the two
+    never leaves rows probed under different planes; rows without
+    meta are refused — :func:`.lifecycle.frozen_meta`), sign the batch
+    with ``sign(src)``, and land the L-copy rows through
+    :func:`.lifecycle.append_batch`."""
+    bits_per_table, n_tables = params["bits_per_table"], params["n_tables"]
+    _srp_require_packable(bits_per_table, n_tables)
+    spark = embeddings.sparkSession
+    what = "SRP index" if kind == "gaussian" else "fixed SRP index"
+    meta = frozen_meta(
+        spark,
+        path,
+        "rows",
+        what,
+        "bucket",
+        params,
+        lambda m: _srp_require_kind(m, kind, path),
     )
-    return df, n
+    if meta is None:
+        write_literal(
+            spark,
+            f"{path}/meta",
+            [(*params.values(), kind)],
+            "".join(f"{p} int, " for p in params) + "kind string",
+        )
+    src = as_stored(embeddings, path, id_col, vec_col).persist()
+    st = src.agg(*id_range(id_col)).collect()[0]
+    tables = _srp_table_structs(bits_per_table, n_tables)
+    append_batch(
+        spark,
+        path,
+        batch_id,
+        {
+            "rows": (
+                sign(src)
+                .select(
+                    F.col(id_col),
+                    F.col(vec_col),
+                    F.explode(tables).alias("tb"),
+                )
+                .select(id_col, vec_col, "tb.t", "tb.bucket")
+                .withColumn("batch", F.lit(batch_id).cast("bigint")),
+                ("batch", "t", "bucket"),
+            )
+        },
+        rows_manifest(src, id_col, batch_id, st),
+    )
+    src.unpersist(blocking=False)
+    return {"batch": int(batch_id), "n_rows": int(st["n_rows"])}
+
+
+def _srp_probe(
+    spark,
+    index_path: str,
+    kind: str,
+    query_bits,
+    query_vec: list[float],
+    k: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """The probe both SRP quantizers share: plane identity from the
+    index's own ``meta``, the query's packed signature from
+    ``query_bits(meta)``, a scan pruned to one (t, bucket) partition
+    per table across all batches, the latest-wins fold over that
+    slice (:func:`.lifecycle.fold_latest`, which also collapses a
+    vector's multi-table matches), and the exact cosine re-rank. On
+    manifest-proven disjoint batches a plain per-id dedup replaces
+    the fold."""
+    meta = spark.read.parquet(f"{index_path}/meta").collect()[0]
+    _srp_require_kind(meta, kind, index_path)
+    cond = _srp_query_cond(
+        query_bits(meta), int(meta["bits_per_table"]), int(meta["n_tables"])
+    )
+    disjoint = rows_disjoint(spark, index_path)
+    candidates = fold_latest(
+        spark.read.parquet(f"{index_path}/rows").where(cond),
+        id_col,
+        [vec_col],
+        disjoint,
+    )
+    if disjoint:
+        candidates = candidates.dropDuplicates([id_col])
+    return brute_force_topk(candidates, query_vec, k, id_col, vec_col)
 
 
 def srp_index_append(
@@ -1013,21 +929,18 @@ def srp_index_append(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> dict:
-    """Append one vector batch to an SRP-LSH index — the
-    :func:`sq8_index_append` lifecycle for the signature-at-rest
-    family (VERDICT r14 #2, the last write-once index): O(batch) per
-    crawl increment, nothing at rest re-read, batch-keyed dynamic
-    partition overwrite so a replayed batch lands identical bytes.
+    """Append one vector batch to an SRP-LSH index: O(batch) per
+    crawl increment through the lifecycle kernel
+    (:func:`.lifecycle.append_batch`).
 
     SRP is the EASY lifecycle: there is no trained state to freeze —
     hyperplanes derive deterministically from (SEED, dim, n_planes),
     so signatures are embarrassingly per-row and no drift concept
     exists (nothing was fit to data). What IS frozen is the plane
     IDENTITY ``(dim, bits_per_table, n_tables)``: batch 0 persists it
-    to ``meta`` BEFORE any rows (the ivf_index_append crash
-    ordering), and a later append passing different values raises —
-    mixed-parameter buckets would silently break partition pruning.
-    Layout::
+    to ``meta`` BEFORE any rows, and a later append passing different
+    values raises — mixed-parameter buckets would silently break
+    partition pruning. Layout::
 
         {path}/meta                    (dim, bits_per_table, n_tables)
         {path}/rows/batch=/t=/bucket=  (id, vec) — one row per
@@ -1035,79 +948,18 @@ def srp_index_append(
                                        srp_index_write L-copy layout
         {path}/rows_manifest/batch=    (min_id, max_id, n_rows)
 
-    The manifest row is deleted before the batch's rows are
-    rewritten, so a replay interrupted between the two leaves the
-    batch missing from the manifest and :func:`srp_index_topk` fails
-    CLOSED into its latest-wins fold (ADVICE r14). Returns
-    ``{"batch", "n_rows"}``."""
-    from pyspark.errors import AnalysisException
-
-    _srp_require_packable(bits_per_table, n_tables)
-    spark = embeddings.sparkSession
-    try:
-        meta = spark.read.parquet(f"{path}/meta").collect()[0]
-        _srp_require_kind(meta, "gaussian", path)
-        stored_params = (
-            int(meta["dim"]),
-            int(meta["bits_per_table"]),
-            int(meta["n_tables"]),
-        )
-        if stored_params != (dim, bits_per_table, n_tables):
-            raise ValueError(
-                f"SRP index at {path} was created with (dim,"
-                f" bits_per_table, n_tables)={stored_params}; appending"
-                f" with {(dim, bits_per_table, n_tables)} would bucket"
-                " incompatibly"
-            )
-    except AnalysisException:
-        # A tree with rows but no meta is a foreign/partial artifact
-        # (partial copy, manual meta deletion) — treating it as NEW
-        # would merge this batch under possibly different plane
-        # identity, exactly the mixed-parameter corruption the meta
-        # check exists to prevent (the ivf_index_append_fixed
-        # 'centroids but no meta' discipline; round-16 review).
-        if _fs_exists(spark, f"{path}/rows"):
-            raise ValueError(
-                f"SRP index at {path} has rows but no meta — its plane"
-                " identity (dim, bits_per_table, n_tables) is"
-                " unknowable; rebuild the index (the append would"
-                " otherwise bucket against unverifiable planes)"
-            )
-        # plane identity persists BEFORE any rows so a crash between
-        # the two never leaves rows probed under different planes
-        spark.createDataFrame(
-            [(dim, bits_per_table, n_tables, "gaussian")],
-            "dim int, bits_per_table int, n_tables int, kind string",
-        ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
-    try:
-        stored = spark.read.parquet(f"{path}/rows").schema
-        embeddings = embeddings.select(
-            F.col(id_col).cast(stored[id_col].dataType),
-            F.col(vec_col).cast(stored[vec_col].dataType),
-        )
-    except AnalysisException:
-        pass  # first batch defines the types
-    src = embeddings.select(id_col, vec_col).persist()
+    Returns ``{"batch", "n_rows"}``."""
     n_planes = bits_per_table * n_tables
-    sig = srp_signature(src, dim, n_planes, vec_col)
-    tables = _srp_table_structs(bits_per_table, n_tables)
-    # fail-closed replay: manifest row first, then the batch dir — a
-    # different-content replay must replace the t=/bucket= leaves too
-    _drop_manifest_row(spark, f"{path}/rows_manifest", batch_id)
-    _drop_batch_dirs(spark, batch_id, f"{path}/rows")
-    _write_batch_keyed(
-        sig.select(
-            F.col(id_col), F.col(vec_col), F.explode(tables).alias("tb")
-        )
-        .select(id_col, vec_col, "tb.t", "tb.bucket")
-        .withColumn("batch", F.lit(batch_id).cast("bigint")),
-        f"{path}/rows",
-        ("batch", "t", "bucket"),
+    return _srp_append(
+        embeddings,
+        path,
+        batch_id,
+        "gaussian",
+        {"dim": dim, "bits_per_table": bits_per_table, "n_tables": n_tables},
+        lambda src: srp_signature(src, dim, n_planes, vec_col),
+        id_col,
+        vec_col,
     )
-    mm, n_rows = _manifest_from_agg(src, id_col, batch_id)
-    _write_batch_keyed(mm, f"{path}/rows_manifest", ("batch",))
-    src.unpersist(blocking=False)
-    return {"batch": int(batch_id), "n_rows": n_rows}
 
 
 def srp_index_topk(
@@ -1124,117 +976,38 @@ def srp_index_topk(
     sub-bucket per table is computed driver-side from the stored
     (dim, bits, tables), the scan touches only ``n_tables`` of the
     ``n_tables × 2^bits`` (t, bucket) partitions per batch, and
-    candidates are exactly re-ranked. Duplicate safety is the
-    :func:`ivf_index_topk` contract: multi-batch trees fold
-    candidates to one row per id (latest batch wins — which also
-    collapses a vector's multi-table matches) UNLESS the per-append
-    ``rows_manifest`` proves the batches' id ranges pairwise
-    disjoint, where a plain per-id dropDuplicates suffices; either
-    pass runs over the PRUNED probe slice only, never the index."""
-    meta = spark.read.parquet(f"{index_path}/meta").collect()[0]
-    _srp_require_kind(meta, "gaussian", index_path)
-    dim = int(meta["dim"])
-    bits_per_table = int(meta["bits_per_table"])
-    n_tables = int(meta["n_tables"])
-    qbits = _srp_query_bits(query_vec, dim, bits_per_table * n_tables)
-    rows = spark.read.parquet(f"{index_path}/rows")
-    cond = _srp_query_cond(qbits, bits_per_table, n_tables)
-    candidates = rows.where(cond).select(id_col, vec_col, "batch")
-    # _batches_disjoint short-circuits True on <=1 live batches, so no
-    # separate _n_batches pre-check (one listStatus, not two)
-    if not _batches_disjoint(
+    candidates fold latest-wins over that pruned slice before the
+    exact re-rank."""
+    return _srp_probe(
         spark,
-        f"{index_path}/rows",
-        f"{index_path}/rows_manifest",
-        "min_id",
-        "max_id",
-        "n_rows",
-    ):
-        candidates = candidates.groupBy(id_col).agg(
-            F.max_by(vec_col, "batch").alias(vec_col)
-        )
-    else:
-        candidates = candidates.dropDuplicates([id_col])
-    return brute_force_topk(
-        candidates.select(id_col, vec_col), query_vec, k, id_col, vec_col
+        index_path,
+        "gaussian",
+        lambda meta: _srp_query_bits(
+            query_vec,
+            int(meta["dim"]),
+            int(meta["bits_per_table"]) * int(meta["n_tables"]),
+        ),
+        query_vec,
+        k,
+        id_col,
+        vec_col,
     )
 
 
 def srp_index_compact(spark, src_path: str, dst_path: str) -> str:
     """Compact an SRP delta tree into a single-batch index published
-    as the next serving version under ``dst_path`` — the
-    :func:`ivf_index_compact` economics: signatures are per-vector
-    facts under the frozen plane identity, so compaction folds
-    re-delivered ids to their latest row PER TABLE (bucket follows
-    the winning vector — both are functions of the same row) and
-    re-partitions; probe results identical by construction. The
-    rebuilt batch-0 ``rows_manifest`` counts VECTORS (one manifest
-    row per id, not per L-copy), written agg-then-withColumn so the
-    post-compaction disjoint fast path engages (the ADVICE-r14
-    ivf_index_compact lesson). Layout-driven, so
-    :func:`srp_index_append_fixed` trees compact through this same
-    path (meta — including the fixed twin's scale — is copied
-    verbatim; probe-identity pytest). Crash contract:
-    publish_version."""
-    from ..sources.writers import publish_version
-
-    meta = spark.read.parquet(f"{src_path}/meta")
-
-    def build(vdir: str) -> None:
-        meta.coalesce(1).write.mode("overwrite").parquet(f"{vdir}/meta")
-        rows = spark.read.parquet(f"{src_path}/rows")
-        id_col = [
-            f.name
-            for f in rows.schema.fields
-            if f.name not in ("t", "bucket", "batch")
-            and "array" not in f.dataType.simpleString()
-        ][0]
-        vec_col = [
-            f.name
-            for f in rows.schema.fields
-            if "array" in f.dataType.simpleString()
-        ][0]
-        # ONE max_by over a (vec, bucket) struct, not two independent
-        # ones (round-16 review): with duplicate rows for the same
-        # (id, t) inside one batch, two max_by calls could each pick a
-        # DIFFERENT duplicate on the batch tie, persisting a bucket
-        # inconsistent with the stored vector — later probes would
-        # then prune that vector into the wrong (t, bucket) partition.
-        # Folding the struct guarantees vector and bucket always come
-        # from the same winning row.
-        _write_batch_keyed(
-            rows.groupBy(id_col, "t")
-            .agg(
-                F.max_by(F.struct(vec_col, "bucket"), "batch").alias("w")
-            )
-            .withColumn("batch", F.lit(0).cast("bigint"))
-            .select(
-                id_col,
-                F.col(f"w.{vec_col}").alias(vec_col),
-                "batch",
-                "t",
-                F.col("w.bucket").alias("bucket"),
-            ),
-            f"{vdir}/rows",
-            ("batch", "t", "bucket"),
-        )
-        # vector-count manifest from the t=0 slice (each vector has
-        # exactly one row per table — partition-pruned single-table
-        # scan instead of an index-wide countDistinct)
-        _write_batch_keyed(
-            spark.read.parquet(f"{vdir}/rows")
-            .where(F.col("t") == 0)
-            .agg(
-                F.min(F.col(id_col)).alias("min_id"),
-                F.max(F.col(id_col)).alias("max_id"),
-                F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-            )
-            .withColumn("batch", F.lit(0).cast("bigint")),
-            f"{vdir}/rows_manifest",
-            ("batch",),
-        )
-
-    return publish_version(spark, dst_path, build)
+    as the next serving version under ``dst_path``
+    (:func:`.lifecycle.compact_rows`): signatures are per-vector facts
+    under the frozen plane identity, so compaction folds re-delivered
+    ids to their latest row PER TABLE (vector and bucket from the same
+    winning row) and re-partitions; probe results are identical by
+    construction. The batch-0 ``rows_manifest`` counts VECTORS (the
+    t=0 copy). Layout-driven, so :func:`srp_index_append_fixed` trees
+    compact through this same path (meta — including the fixed twin's
+    scale — is copied verbatim)."""
+    return compact_rows(
+        spark, src_path, dst_path, ("batch", "t", "bucket"), keys=("t",)
+    )
 
 
 def _srp_fixed_planes(n_planes: int, dim: int):
@@ -1308,73 +1081,46 @@ def srp_index_append_fixed(
     cross-engine proof its Gaussian-plane entries (rows-only by
     necessity) cannot give: integer planes
     (:func:`_srp_fixed_planes`), floor-quantized integer dots
-    (:func:`srp_signature_fixed`), the same batch=/t=/bucket= layout,
-    manifest, fail-closed replay, and frozen identity — here
+    (:func:`srp_signature_fixed`), the same batch=/t=/bucket= layout
+    and lifecycle, and frozen identity — here
     ``(dim, bits_per_table, n_tables, scale)``, persisted to ``meta``
     before any rows; mismatched appends raise. Returns
     ``{"batch", "n_rows"}``."""
-    from pyspark.errors import AnalysisException
+    return _srp_append(
+        embeddings,
+        path,
+        batch_id,
+        "fixed",
+        {
+            "dim": dim,
+            "bits_per_table": bits_per_table,
+            "n_tables": n_tables,
+            "scale": scale,
+        },
+        lambda src: srp_signature_fixed(
+            src, dim, bits_per_table * n_tables, vec_col, scale=scale
+        ),
+        id_col,
+        vec_col,
+    )
 
-    _srp_require_packable(bits_per_table, n_tables)
-    spark = embeddings.sparkSession
-    try:
-        meta = spark.read.parquet(f"{path}/meta").collect()[0]
-        _srp_require_kind(meta, "fixed", path)
-        stored = (
-            int(meta["dim"]),
-            int(meta["bits_per_table"]),
-            int(meta["n_tables"]),
-            int(meta["scale"]),
-        )
-        if stored != (dim, bits_per_table, n_tables, scale):
-            raise ValueError(
-                f"fixed SRP index at {path} was created with (dim,"
-                f" bits_per_table, n_tables, scale)={stored}; appending"
-                f" with {(dim, bits_per_table, n_tables, scale)} would"
-                " bucket incompatibly"
-            )
-    except AnalysisException:
-        # rows without meta: foreign/partial artifact — refuse, like
-        # the gaussian append (round-16 review)
-        if _fs_exists(spark, f"{path}/rows"):
-            raise ValueError(
-                f"fixed SRP index at {path} has rows but no meta — its"
-                " plane identity (dim, bits_per_table, n_tables,"
-                " scale) is unknowable; rebuild the index"
-            )
-        spark.createDataFrame(
-            [(dim, bits_per_table, n_tables, scale, "fixed")],
-            "dim int, bits_per_table int, n_tables int, scale int,"
-            " kind string",
-        ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
-    try:
-        stored_schema = spark.read.parquet(f"{path}/rows").schema
-        embeddings = embeddings.select(
-            F.col(id_col).cast(stored_schema[id_col].dataType),
-            F.col(vec_col).cast(stored_schema[vec_col].dataType),
-        )
-    except AnalysisException:
-        pass  # first batch defines the types
-    src = embeddings.select(id_col, vec_col).persist()
-    sig = srp_signature_fixed(
-        src, dim, bits_per_table * n_tables, vec_col, scale=scale
+
+def _srp_fixed_query_bits(query_vec: list[float], meta) -> int:
+    """Packed signature of a query under a fixed twin's stored
+    identity: floor-quantized query, integer plane dots."""
+    planes = _srp_fixed_planes(
+        int(meta["bits_per_table"]) * int(meta["n_tables"]), int(meta["dim"])
     )
-    tables = _srp_table_structs(bits_per_table, n_tables)
-    _drop_manifest_row(spark, f"{path}/rows_manifest", batch_id)
-    _drop_batch_dirs(spark, batch_id, f"{path}/rows")
-    _write_batch_keyed(
-        sig.select(
-            F.col(id_col), F.col(vec_col), F.explode(tables).alias("tb")
-        )
-        .select(id_col, vec_col, "tb.t", "tb.bucket")
-        .withColumn("batch", F.lit(batch_id).cast("bigint")),
-        f"{path}/rows",
-        ("batch", "t", "bucket"),
+    scale = int(meta["scale"])
+    qq = np.asarray(
+        [int(math.floor(float(x) * scale)) for x in query_vec],
+        dtype=np.int64,
     )
-    mm, n_rows = _manifest_from_agg(src, id_col, batch_id)
-    _write_batch_keyed(mm, f"{path}/rows_manifest", ("batch",))
-    src.unpersist(blocking=False)
-    return {"batch": int(batch_id), "n_rows": n_rows}
+    qbits = 0
+    for i, d in enumerate(planes @ qq):
+        if int(d) >= 0:
+            qbits |= 1 << i
+    return qbits
 
 
 def srp_index_topk_fixed(
@@ -1389,49 +1135,19 @@ def srp_index_topk_fixed(
     :func:`srp_index_topk` semantics with the portable quantizer,
     SELF-CONTAINED: (dim, bits, tables, scale) come from the index's
     own ``meta``. The query floor-quantizes driver-side, its integer
-    plane dots pick one bucket per table, the scan prunes to those
-    (t, bucket) partitions across all batches, candidates fold
-    latest-batch-wins per id over the PRUNED slice (skipped for
-    manifest-proven disjoint batches, where a plain per-id dedup
-    suffices), and the exact double cosine re-ranks. Every step is
-    integer or frozen-shape IEEE — the DuckDB oracle replays append,
-    fold, and probe in one statement."""
-    meta = spark.read.parquet(f"{index_path}/meta").collect()[0]
-    _srp_require_kind(meta, "fixed", index_path)
-    dim = int(meta["dim"])
-    bits_per_table = int(meta["bits_per_table"])
-    n_tables = int(meta["n_tables"])
-    scale = int(meta["scale"])
-    planes = _srp_fixed_planes(bits_per_table * n_tables, dim)
-    qq = np.asarray(
-        [int(math.floor(float(x) * scale)) for x in query_vec],
-        dtype=np.int64,
-    )
-    dots = planes @ qq
-    qbits = 0
-    for i, d in enumerate(dots):
-        if int(d) >= 0:
-            qbits |= 1 << i
-    rows = spark.read.parquet(f"{index_path}/rows")
-    cond = _srp_query_cond(qbits, bits_per_table, n_tables)
-    candidates = rows.where(cond).select(id_col, vec_col, "batch")
-    # _batches_disjoint short-circuits True on <=1 live batches, so no
-    # separate _n_batches pre-check (one listStatus, not two)
-    if not _batches_disjoint(
+    plane dots pick one bucket per table, and the shared probe
+    prunes, folds and re-ranks. Every step is integer or frozen-shape
+    IEEE — the DuckDB oracle replays append, fold, and probe in one
+    statement."""
+    return _srp_probe(
         spark,
-        f"{index_path}/rows",
-        f"{index_path}/rows_manifest",
-        "min_id",
-        "max_id",
-        "n_rows",
-    ):
-        candidates = candidates.groupBy(id_col).agg(
-            F.max_by(vec_col, "batch").alias(vec_col)
-        )
-    else:
-        candidates = candidates.dropDuplicates([id_col])
-    return brute_force_topk(
-        candidates.select(id_col, vec_col), query_vec, k, id_col, vec_col
+        index_path,
+        "fixed",
+        lambda meta: _srp_fixed_query_bits(query_vec, meta),
+        query_vec,
+        k,
+        id_col,
+        vec_col,
     )
 
 
@@ -1782,6 +1498,23 @@ def ivf_assign_probes(
     return df.withColumn("probe_cells", _cells(F.col(vec_col)))
 
 
+def _probe_cells(centroids, query_vec, nprobe: int) -> list[int]:
+    """The query's ``nprobe`` nearest cells, nearest first —
+    O(n_cells) on the driver."""
+    q = np.asarray(query_vec, dtype=np.float64)
+    d2 = ((np.asarray(centroids, dtype=np.float64) - q[None, :]) ** 2).sum(
+        axis=1
+    )
+    return [int(i) for i in d2.argsort()[:nprobe]]
+
+
+def _ivf_centroids(spark, path: str) -> np.ndarray:
+    """The frozen ``centroids`` of an IVF or IVF-PQ lifecycle tree, in
+    cell order."""
+    crows = spark.read.parquet(f"{path}/centroids").orderBy("cell")
+    return np.asarray([list(r["c"]) for r in crows.collect()])
+
+
 def ivf_topk(
     embeddings: DataFrame,
     query_vec: list[float],
@@ -1793,9 +1526,7 @@ def ivf_topk(
 ) -> DataFrame:
     """IVF ANN: rank the query's ``nprobe`` nearest cells driver-side,
     scan only vectors assigned to those cells, exact-rank the rest."""
-    q = np.asarray(query_vec, dtype=np.float64)
-    d2 = ((centroids - q[None, :]) ** 2).sum(axis=1)
-    probes = [int(i) for i in d2.argsort()[:nprobe]]
+    probes = _probe_cells(centroids, query_vec, nprobe)
     assigned = ivf_assign(embeddings, centroids, vec_col)
     candidates = assigned.where(F.col("ivf_cell").isin(probes))
     return brute_force_topk(candidates, query_vec, k, id_col, vec_col)
@@ -1839,9 +1570,7 @@ def ivf_topk_at_rest(
     the difference is the scan reads nprobe/n_cells of the data via
     PartitionFilters instead of computing assignments over the full
     table per query."""
-    q = np.asarray(query_vec, dtype=np.float64)
-    d2 = ((centroids - q[None, :]) ** 2).sum(axis=1)
-    probes = [int(i) for i in d2.argsort()[:nprobe]]
+    probes = _probe_cells(centroids, query_vec, nprobe)
     idx = spark.read.parquet(index_path)
     candidates = idx.where(F.col("ivf_cell").isin(probes))
     return brute_force_topk(candidates, query_vec, k, id_col, vec_col)
@@ -1891,11 +1620,9 @@ def ivf_index_append(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> dict:
-    """Append one vector batch to an IVF index — the
-    :func:`sq8_index_append` lifecycle applied to the inverted-list
-    family: O(batch) per crawl increment, nothing at rest re-read,
-    batch-keyed dynamic partition overwrite so a replayed batch lands
-    identical bytes.
+    """Append one vector batch to an IVF index: O(batch) per crawl
+    increment through the lifecycle kernel
+    (:func:`.lifecycle.append_batch`).
 
     The coarse quantizer (centroids) is FROZEN at creation — batch 0
     trains it (:func:`ivf_train_centroids`, deterministic seed) and
@@ -1921,8 +1648,7 @@ def ivf_index_append(
 
     spark = embeddings.sparkSession
     try:
-        crows = spark.read.parquet(f"{path}/centroids").orderBy("cell")
-        centroids = np.asarray([list(r["c"]) for r in crows.collect()])
+        centroids = _ivf_centroids(spark, path)
         fit_mean_d2 = float(
             spark.read.parquet(f"{path}/meta").collect()[0]["fit_mean_d2"]
         )
@@ -1931,79 +1657,52 @@ def ivf_index_append(
             embeddings, n_cells, id_col=id_col, vec_col=vec_col
         )
         fit_mean_d2 = None
-    try:
-        # normalize to the index's stored column types (one footer
-        # read) — a feed switching float → double mid-stream would
-        # otherwise write a mixed-type tree that fails at probe time
-        stored = spark.read.parquet(f"{path}/rows").schema
-        embeddings = embeddings.select(
-            F.col(id_col).cast(stored[id_col].dataType),
-            F.col(vec_col).cast(stored[vec_col].dataType),
-        )
-    except AnalysisException:
-        pass  # first batch defines the types
-    assigned = _ivf_assign_with_d2(
-        embeddings.select(id_col, vec_col), centroids, vec_col
-    ).persist()
-    stats = assigned.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-        F.avg("d2").alias("mean_d2"),
+    embeddings = as_stored(embeddings, path, id_col, vec_col)
+    assigned = _ivf_assign_with_d2(embeddings, centroids, vec_col).persist()
+    st = assigned.agg(
+        *id_range(id_col), F.avg("d2").alias("mean_d2")
     ).collect()[0]
-    mean_d2 = float(stats["mean_d2"] or 0.0)
+    mean_d2 = float(st["mean_d2"] or 0.0)
     if fit_mean_d2 is None:
         # quantizer identity persists BEFORE any rows so a crash
         # between the two never leaves rows assigned to lost centroids
         fit_mean_d2 = mean_d2
-        spark.createDataFrame(
+        write_literal(
+            spark,
+            f"{path}/centroids",
             [(i, [float(x) for x in row]) for i, row in enumerate(centroids)],
             "cell int, c array<double>",
-        ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
-        spark.createDataFrame(
+        )
+        write_literal(
+            spark,
+            f"{path}/meta",
             [(len(centroids), fit_mean_d2)],
             "n_cells int, fit_mean_d2 double",
-        ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
-    # fail-closed replay: manifest row first, then the batch dir — a
-    # different-content replay must replace the ivf_cell= leaves too
-    # (dynamic overwrite only swaps the leaves present in new data)
-    _drop_manifest_row(spark, f"{path}/rows_manifest", batch_id)
-    _drop_batch_dirs(spark, batch_id, f"{path}/rows")
-    _write_batch_keyed(
-        assigned.withColumn("batch", F.lit(batch_id).cast("bigint")),
-        f"{path}/rows",
-        ("batch", "ivf_cell"),
-    )
-    drift_ratio = mean_d2 / fit_mean_d2 if fit_mean_d2 > 0 else 1.0
-    _write_batch_keyed(
-        spark.createDataFrame(
-            [
-                (
-                    int(batch_id),
-                    int(stats["n_rows"]),
-                    mean_d2,
-                    float(drift_ratio),
-                )
-            ],
-            "batch bigint, n_rows bigint, mean_d2 double,"
-            " drift_ratio double",
-        ),
-        f"{path}/drift",
-        ("batch",),
-    )
-    _write_batch_keyed(
-        assigned.agg(
-            F.min(F.col(id_col)).alias("min_id"),
-            F.max(F.col(id_col)).alias("max_id"),
-            F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-        ).withColumn("batch", F.lit(batch_id).cast("bigint")),
-        f"{path}/rows_manifest",
-        ("batch",),
+        )
+    append_batch(
+        spark,
+        path,
+        batch_id,
+        {
+            "rows": (
+                assigned.withColumn("batch", F.lit(batch_id).cast("bigint")),
+                ("batch", "ivf_cell"),
+            ),
+            "drift": (
+                drift_row(
+                    spark, batch_id, st["n_rows"], "d2", mean_d2, fit_mean_d2
+                ),
+                ("batch",),
+            ),
+        },
+        rows_manifest(embeddings, id_col, batch_id, st),
     )
     assigned.unpersist(blocking=False)
     return {
         "batch": int(batch_id),
-        "n_rows": int(stats["n_rows"]),
+        "n_rows": int(st["n_rows"]),
         "mean_d2": mean_d2,
-        "drift_ratio": float(drift_ratio),
+        "drift_ratio": drift_ratio(mean_d2, fit_mean_d2),
     }
 
 
@@ -2021,38 +1720,18 @@ def ivf_index_topk(
     :func:`ivf_topk_at_rest`'s caller-held quantizer): rank the
     query's ``nprobe`` nearest stored centroids driver-side, scan
     only those ``ivf_cell=`` partitions across all batches (partition
-    pruning), exact-rank the candidates. Duplicate-id safety is the
-    :func:`sq8_topk_at_rest` contract: multi-batch trees fold to one
-    row per id (latest batch wins) UNLESS the per-append
-    ``rows_manifest`` proves the batches' id ranges pairwise disjoint
-    — the append-only crawl case skips the fold entirely, and the
-    fold only ever runs over the PRUNED nprobe/n_cells slice, never
-    the index."""
-    crows = spark.read.parquet(f"{index_path}/centroids").orderBy("cell")
-    centroids = np.asarray([list(r["c"]) for r in crows.collect()])
-    q = np.asarray(query_vec, dtype=np.float64)
-    d2 = ((centroids - q[None, :]) ** 2).sum(axis=1)
-    probes = [int(i) for i in d2.argsort()[:nprobe]]
+    pruning), fold the pruned slice latest-wins
+    (:func:`.lifecycle.fold_latest`, skipped on manifest-proven
+    disjoint batches), and exact-rank the candidates."""
+    probes = _probe_cells(_ivf_centroids(spark, index_path), query_vec, nprobe)
     rows = spark.read.parquet(f"{index_path}/rows")
-    candidates = rows.where(F.col("ivf_cell").isin(probes)).select(
-        id_col, vec_col, "batch"
+    candidates = fold_latest(
+        rows.where(F.col("ivf_cell").isin(probes)),
+        id_col,
+        [vec_col],
+        rows_disjoint(spark, index_path),
     )
-    # _batches_disjoint short-circuits True on <=1 live batches, so no
-    # separate _n_batches pre-check (one listStatus, not two)
-    if not _batches_disjoint(
-        spark,
-        f"{index_path}/rows",
-        f"{index_path}/rows_manifest",
-        "min_id",
-        "max_id",
-        "n_rows",
-    ):
-        candidates = candidates.groupBy(id_col).agg(
-            F.max_by(vec_col, "batch").alias(vec_col)
-        )
-    return brute_force_topk(
-        candidates.select(id_col, vec_col), query_vec, k, id_col, vec_col
-    )
+    return brute_force_topk(candidates, query_vec, k, id_col, vec_col)
 
 
 def ivf_drift_report(
@@ -2071,22 +1750,12 @@ def ivf_drift_report(
     the latter), cheap because the append already paid the distance
     computation. Recommends a re-fit when the live mean squared
     distance exceeds ``refit_threshold ×`` the creation batch's."""
-    from pyspark.errors import AnalysisException
-
     if live not in ("full", "sample", "off"):
         raise ValueError(f"unknown live mode {live!r}")
     fit_mean_d2 = float(
         spark.read.parquet(f"{index_path}/meta").collect()[0]["fit_mean_d2"]
     )
-    try:
-        log = [
-            r.asDict()
-            for r in spark.read.parquet(f"{index_path}/drift")
-            .orderBy("batch")
-            .collect()
-        ]
-    except AnalysisException:
-        log = []
+    log = drift_log(spark, index_path)
     if live == "off":
         n = sum(int(r["n_rows"]) for r in log)
         mean_d2 = (
@@ -2103,7 +1772,7 @@ def ivf_drift_report(
         ).collect()[0]
         n = int(got["n"] or 0)
         mean_d2 = float(got["m"] or 0.0)
-    ratio = mean_d2 / fit_mean_d2 if fit_mean_d2 > 0 else 1.0
+    ratio = drift_ratio(mean_d2, fit_mean_d2)
     return {
         "live_mode": live,
         "mean_d2": mean_d2,
@@ -2121,117 +1790,39 @@ def ivf_drift_report(
 
 def ivf_index_compact(spark, src_path: str, dst_path: str) -> str:
     """Compact an IVF delta tree into a single-batch index published
-    as the next serving version under ``dst_path`` — the
-    :func:`sq8_index_compact` economics: cell assignment and d2 are
+    as the next serving version under ``dst_path``
+    (:func:`.lifecycle.compact_rows`): cell assignment and d2 are
     per-vector facts under FROZEN centroids (copied verbatim — they
     ARE the index identity), so compaction folds re-delivered ids to
     their latest row and re-partitions; probe results identical by
     construction. Rewrites the folded batch-0 drift row and manifest
-    so post-compaction appends keep both protocols working. Crash
-    contract: publish_version."""
-    from ..sources.writers import publish_version
-
-    centroids = spark.read.parquet(f"{src_path}/centroids")
-    meta = spark.read.parquet(f"{src_path}/meta")
-    fit_mean_d2 = float(meta.collect()[0]["fit_mean_d2"])
-
-    def build(vdir: str) -> None:
-        centroids.coalesce(1).write.mode("overwrite").parquet(
-            f"{vdir}/centroids"
-        )
-        meta.coalesce(1).write.mode("overwrite").parquet(f"{vdir}/meta")
-        rows = spark.read.parquet(f"{src_path}/rows")
-        id_col = [
-            f.name
-            for f in rows.schema.fields
-            if f.name not in ("ivf_cell", "d2", "batch")
-            and "array" not in f.dataType.simpleString()
-        ][0]
-        others = [
-            f.name
-            for f in rows.schema.fields
-            if f.name not in (id_col, "batch", "ivf_cell")
-        ]
-        _write_batch_keyed(
-            rows.groupBy(id_col)
-            .agg(
-                *[F.max_by(c, "batch").alias(c) for c in others],
-                F.max_by("ivf_cell", "batch").alias("ivf_cell"),
-            )
-            .withColumn("batch", F.lit(0).cast("bigint")),
-            f"{vdir}/rows",
-            ("batch", "ivf_cell"),
-        )
-        folded = spark.read.parquet(f"{vdir}/rows")
-        st = folded.agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-            F.avg("d2").alias("mean_d2"),
-        ).collect()[0]
-        m = float(st["mean_d2"] or 0.0)
-        _write_batch_keyed(
-            spark.createDataFrame(
-                [
-                    (
-                        0,
-                        int(st["n_rows"]),
-                        m,
-                        m / fit_mean_d2 if fit_mean_d2 > 0 else 1.0,
-                    )
-                ],
-                "batch bigint, n_rows bigint, mean_d2 double,"
-                " drift_ratio double",
-            ),
-            f"{vdir}/drift",
-            ("batch",),
-        )
-        # agg-then-withColumn (the _sq8_write_manifest discipline):
-        # the read-back manifest schema puts the `batch` partition
-        # column LAST, so a positional tuple starting with 0 would
-        # land batch=<n_rows> with garbage min/max — and the batch-0
-        # row the post-compaction disjoint fast path needs would
-        # never exist.
-        _sq8_write_manifest(spark, vdir, id_col)
-
-    return publish_version(spark, dst_path, build)
+    so post-compaction appends keep both protocols working."""
+    return compact_rows(
+        spark, src_path, dst_path, ("batch", "ivf_cell"), drift="d2"
+    )
 
 
 def ivf_index_refit(
     spark, src_path: str, dst_path: str, n_cells: int | None = None
 ) -> str:
-    """RE-FIT a drifted IVF index: retrain centroids over the folded
-    at-rest vectors (latest row per id), re-assign everything, and
+    """RE-FIT a drifted IVF index (:func:`.lifecycle.refit`): retrain
+    centroids over the folded at-rest vectors (latest row per id),
+    re-assign everything through :func:`ivf_index_append`, and
     publish as the next serving version — resets the drift baseline
     (fresh fit_mean_d2). ``n_cells=None`` keeps the stored cell
-    count. Crash contract: publish_version; the source deltas are
-    untouched."""
-    from ..sources.writers import publish_version
-
-    rows = spark.read.parquet(f"{src_path}/rows")
-    id_col = [
-        f.name
-        for f in rows.schema.fields
-        if f.name not in ("ivf_cell", "d2", "batch")
-        and "array" not in f.dataType.simpleString()
-    ][0]
-    vec_col = [
-        f.name
-        for f in rows.schema.fields
-        if "array" in f.dataType.simpleString()
-    ][0]
+    count."""
     if n_cells is None:
         n_cells = int(
             spark.read.parquet(f"{src_path}/meta").collect()[0]["n_cells"]
         )
-    folded = rows.groupBy(id_col).agg(
-        F.max_by(vec_col, "batch").alias(vec_col)
+    return refit(
+        spark,
+        src_path,
+        dst_path,
+        lambda df, vdir, id_col, vec_col: ivf_index_append(
+            df, vdir, 0, n_cells, id_col, vec_col
+        ),
     )
-
-    def build(vdir: str) -> None:
-        ivf_index_append(
-            folded, vdir, 0, n_cells=n_cells, id_col=id_col, vec_col=vec_col
-        )
-
-    return publish_version(spark, dst_path, build)
 
 
 def ivf_index_append_fixed(
@@ -2259,56 +1850,34 @@ def ivf_index_append_fixed(
        comparison decides a cell on either engine.
 
     Rows land as ``(id, v double[], nrm)`` under
-    ``batch=<id>/ivf_cell=<cell>`` plus the standard ``rows_manifest``
-    (fail-closed replay: manifest row dropped first, then the batch's
-    row dirs, so neither a crash mid-replay nor a completed
-    different-content replay can leave stale rows a fresh manifest
-    row would 'prove' away). The quantizer identity ``(n_centroids,
-    scale)`` freezes in ``meta`` alongside the centroids (the
-    srp_index_append discipline — round-15 review): a later append
-    passing different values raises instead of silently
-    mis-quantizing. Returns {"batch", "n_rows"}."""
-    from pyspark.errors import AnalysisException
-
+    ``batch=<id>/ivf_cell=<cell>`` through
+    :func:`.lifecycle.append_batch`. The quantizer identity
+    ``(n_centroids, scale)`` freezes in ``meta`` alongside the
+    centroids: a later append passing different values raises
+    instead of silently mis-quantizing, and a tree with centroids but
+    no meta is refused (:func:`.lifecycle.frozen_meta`). Returns
+    {"batch", "n_rows"}."""
     spark = embeddings.sparkSession
     base = _fixed_base(embeddings, id_col, vec_col, scale)
-    try:
-        cents = spark.read.parquet(f"{path}/centroids")
-        created = True
-    except AnalysisException:
-        created = False
-    if created:
-        # NEVER regenerate centroids for an existing tree (round-15
-        # review): the centroids ARE the index identity — rebuilding
-        # them from a later batch would desynchronize every
-        # already-assigned row's ivf_cell from the probe's pruning.
-        # A tree with centroids but no meta is a foreign/partial
-        # artifact: refuse loudly rather than guess its scale.
-        try:
-            meta = spark.read.parquet(f"{path}/meta").collect()[0]
-        except AnalysisException:
-            raise ValueError(
-                f"fixed IVF index at {path} has centroids but no meta"
-                " — its quantizer identity (n_centroids, scale) is"
-                " unknowable; rebuild the index (the append would"
-                " otherwise quantize against an unverifiable grid)"
-            )
-        stored = (int(meta["n_centroids"]), int(meta["scale"]))
-        if stored != (n_centroids, scale):
-            raise ValueError(
-                f"fixed IVF index at {path} was created with"
-                f" (n_centroids, scale)={stored}; appending with"
-                f" {(n_centroids, scale)} would quantize incompatibly"
-            )
-    else:
-        # quantizer identity persists BEFORE any rows (crash
-        # ordering), meta BEFORE centroids: the centroids read above
-        # is the creation marker, so a crash between the two writes
-        # leaves a meta-only tree the next append simply recreates —
-        # never the unrecoverable centroids-without-meta state.
-        spark.createDataFrame(
-            [(n_centroids, scale)], "n_centroids int, scale int"
-        ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
+    frozen_meta(
+        spark,
+        path,
+        "centroids",
+        "fixed IVF index",
+        "quantize",
+        {"n_centroids": n_centroids, "scale": scale},
+    )
+    # NEVER regenerate centroids for an existing tree: they ARE the
+    # index identity. Meta is written BEFORE centroids, and centroids
+    # are the creation marker, so a crash between the two writes
+    # leaves a meta-only tree the next append simply recreates.
+    if not path_exists(spark, f"{path}/centroids"):
+        write_literal(
+            spark,
+            f"{path}/meta",
+            [(n_centroids, scale)],
+            "n_centroids int, scale int",
+        )
         (
             base.orderBy(id_col)
             .limit(n_centroids)
@@ -2317,19 +1886,23 @@ def ivf_index_append_fixed(
             .write.mode("overwrite")
             .parquet(f"{path}/centroids")
         )
-        cents = spark.read.parquet(f"{path}/centroids")
+    cents = spark.read.parquet(f"{path}/centroids")
     assigned = _fixed_assign(base, cents, id_col).persist()
-    _drop_manifest_row(spark, f"{path}/rows_manifest", batch_id)
-    _drop_batch_dirs(spark, batch_id, f"{path}/rows")
-    _write_batch_keyed(
-        assigned.withColumn("batch", F.lit(batch_id).cast("bigint")),
-        f"{path}/rows",
-        ("batch", "ivf_cell"),
+    st = assigned.agg(*id_range(id_col)).collect()[0]
+    append_batch(
+        spark,
+        path,
+        batch_id,
+        {
+            "rows": (
+                assigned.withColumn("batch", F.lit(batch_id).cast("bigint")),
+                ("batch", "ivf_cell"),
+            )
+        },
+        rows_manifest(assigned, id_col, batch_id, st),
     )
-    mm, n_rows = _manifest_from_agg(assigned, id_col, batch_id)
-    _write_batch_keyed(mm, f"{path}/rows_manifest", ("batch",))
     assigned.unpersist(blocking=False)
-    return {"batch": int(batch_id), "n_rows": n_rows}
+    return {"batch": int(batch_id), "n_rows": int(st["n_rows"])}
 
 
 def ivf_index_topk_fixed(
@@ -2369,25 +1942,13 @@ def ivf_index_topk_fixed(
     )
     probes = [cid for _, cid in d2s[:nprobe]]
     rows = spark.read.parquet(f"{index_path}/rows")
-    candidates = rows.where(F.col("ivf_cell").isin(probes)).select(
-        id_col, "v", "batch"
+    candidates = fold_latest(
+        rows.where(F.col("ivf_cell").isin(probes)),
+        id_col,
+        ["v"],
+        rows_disjoint(spark, index_path),
     )
-    # _batches_disjoint short-circuits True on <=1 live batches, so no
-    # separate _n_batches pre-check (one listStatus, not two)
-    if not _batches_disjoint(
-        spark,
-        f"{index_path}/rows",
-        f"{index_path}/rows_manifest",
-        "min_id",
-        "max_id",
-        "n_rows",
-    ):
-        candidates = candidates.groupBy(id_col).agg(
-            F.max_by("v", "batch").alias("v")
-        )
-    return brute_force_topk(
-        candidates.select(id_col, "v"), query_vec, k, id_col, "v"
-    )
+    return brute_force_topk(candidates, query_vec, k, id_col, "v")
 
 
 def pairwise_topk_per_label(
@@ -3087,14 +2648,6 @@ def _incremental_drops(
     return cross.unionByName(within).distinct()
 
 
-def _fs_exists(spark, path: str) -> bool:
-    # Hadoop FS, not os.path — correct for hdfs://, s3a:// URIs too
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(conf).exists(p)
-
-
 def semantic_centroids_write_fixed(
     embeddings: DataFrame,
     path: str,
@@ -3182,8 +2735,8 @@ def semantic_dedup_incremental_fixed(
     from ..sources import rawstore
 
     if not (
-        _fs_exists(spark, f"{index_path}/rows")
-        or _fs_exists(spark, rawstore.sealed_root(f"{index_path}/rows"))
+        path_exists(spark, f"{index_path}/rows")
+        or path_exists(spark, rawstore.sealed_root(f"{index_path}/rows"))
     ):
         idx_rows = new_assigned.where(F.lit(False)).select(
             id_col, "ivf_cell", "v", "nrm"
@@ -3322,7 +2875,7 @@ def semantic_dedup_incremental(
     new_assigned = persist_into(
         caches, _assign_vnrm(new_df, cents, id_col, vec_col)
     )
-    if not _fs_exists(spark, f"{index_path}/rows"):
+    if not path_exists(spark, f"{index_path}/rows"):
         idx_rows = new_assigned.where(F.lit(False))
     else:
         idx_rows = spark.read.parquet(f"{index_path}/rows")

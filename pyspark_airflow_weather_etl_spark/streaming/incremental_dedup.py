@@ -33,20 +33,12 @@ from ..operators.dedup import (
     portable_minhash_dedup_incremental,
     portable_minhash_pairs,
 )
+from ..operators.lifecycle import path_exists
 from ..sources import rawstore
 
 _run_ids = itertools.count()
 
 PAIRS_SCHEMA = "id_a long, id_b long, jaccard double"
-
-
-def _path_exists(spark: SparkSession, path: str) -> bool:
-    # Hadoop FS, not os.path — correct for hdfs://, s3a:// URIs too
-    # (the directory-layout lesson of streaming/rollup.py).
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(conf).exists(p)
 
 
 def run_streaming_incremental_dedup(
@@ -92,7 +84,7 @@ def run_streaming_incremental_dedup(
             batch, "doc_id", "text", threshold
         ).select("id_a", "id_b", "jaccard")
         out = within
-        if _path_exists(s, index_path) or _path_exists(
+        if path_exists(s, index_path) or path_exists(
             s, rawstore.sealed_root(index_path)
         ):
             # sealed ∪ unsealed-live view of the signature index —

@@ -79,12 +79,10 @@ SLOW_TESTS = {
     "test_kmeans.py::test_diversity_sample_caps_and_spans_cells",
     "test_oracle_parity.py::test_oracle_parity[bm25_prf_expanded_at_rest]",
     "test_oracle_parity.py::test_oracle_parity[semantic_dedup_incremental_cells]",
-    "test_oracle_parity.py::test_oracle_parity[srp_ann_topk_incremental_fixed]",
     "test_oracle_parity.py::test_oracle_parity[streaming_incremental_dedup]",
     "test_oracle_parity.py::test_oracle_parity[streaming_scd2_sealed_store]",
     "test_oracle_parity.py::test_oracle_parity[streaming_semantic_dedup]",
     "test_oracle_parity.py::test_oracle_parity[streaming_span_corruption]",
-    "test_oracle_parity.py::test_oracle_parity[streaming_sq8_index_topk]",
     "test_oracle_parity.py::test_rows_only_queries_run[ivfpq_ann_topk_incremental]",
     "test_oracle_parity.py::test_rows_only_queries_run[opq_ann_topk_incremental]",
     "test_oracle_parity.py::test_rows_only_queries_run[quality_classifier_scores]",

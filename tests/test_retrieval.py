@@ -577,7 +577,7 @@ def test_batch_only_tree_write_gains_no_exchange(spark, tmp_path):
     """Only trees with a level below ``batch`` are rebalanced: a
     manifest-shaped write runs as one stage, with no shuffle, while
     the same rows under (batch, pfx) gain the rebalance exchange."""
-    from pyspark_airflow_weather_etl_spark.operators.retrieval import (
+    from pyspark_airflow_weather_etl_spark.operators.lifecycle import (
         _write_batch_keyed,
     )
 
@@ -605,7 +605,7 @@ def test_literal_frame_matches_create_dataframe(spark):
     """Index metadata rows and probe query tables are planned in the
     JVM: same rows, same nullable schema as ``createDataFrame``, doubles
     bit-exact, and no Python RDD scan in the plan."""
-    from pyspark_airflow_weather_etl_spark.operators.retrieval import (
+    from pyspark_airflow_weather_etl_spark.operators.lifecycle import (
         _literal_frame,
     )
 

@@ -1657,7 +1657,7 @@ def test_append_manifest_fails_closed_on_partial_replay(spark, tmp_path):
     range."""
     import shutil
 
-    from pyspark_airflow_weather_etl_spark.operators.retrieval import (
+    from pyspark_airflow_weather_etl_spark.operators.lifecycle import (
         _batches_disjoint,
         _drop_manifest_row,
     )
@@ -1774,7 +1774,7 @@ def test_completed_replay_replaces_stale_subpartitions(spark, tmp_path):
     manifest row whose range falsely 'proves' them away. The appends
     now drop the whole batch dir first: a completed replay is a true
     replacement."""
-    from pyspark_airflow_weather_etl_spark.operators.retrieval import (
+    from pyspark_airflow_weather_etl_spark.operators.lifecycle import (
         _batches_disjoint,
     )
     from pyspark_airflow_weather_etl_spark.operators.similarity import (
@@ -2064,7 +2064,7 @@ def test_drop_batch_dirs_literal_paths_with_glob_metachars(
     window); '*' opts into globbing for the cell-first layout."""
     import os
 
-    from pyspark_airflow_weather_etl_spark.operators.retrieval import (
+    from pyspark_airflow_weather_etl_spark.operators.lifecycle import (
         _drop_batch_dirs,
     )
 
