@@ -48,7 +48,8 @@ def path_exists(spark: SparkSession, path: str) -> bool:
 
 
 def _write_batch_keyed(df: DataFrame, out_path: str, partition_cols) -> None:
-    """The one writer of every at-rest index tree.
+    """The one writer of every at-rest index tree and of every
+    ``batch=<id>``-keyed streaming sink output.
 
     Rows are rebalanced on the tree's partition columns when the
     layout has a level below ``batch`` (``pfx``, ``dpfx``,

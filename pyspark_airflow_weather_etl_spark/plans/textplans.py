@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 from ..functions.exact import SQL_AVG, avg_of
 from ..operators import dedup as D
 from ..operators import text as X
+from ..operators.lifecycle import _write_batch_keyed
 from ..sources.tables import load_table
 from .registry import register
 
@@ -2368,33 +2369,11 @@ def streaming_span_corruption(spark: SparkSession, sf_dir: str) -> DataFrame:
             if batch_df.isEmpty():
                 return
             out = X.span_corruption_pairs(batch_df)
-            s = out.sparkSession
-            old = s.conf.get(
-                "spark.sql.sources.partitionOverwriteMode", None
+            _write_batch_keyed(
+                out.withColumn("batch", FF.lit(batch_id).cast("bigint")),
+                f"{tmp}/pairs",
+                ["batch"],
             )
-            s.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", "dynamic"
-            )
-            try:
-                (
-                    out.withColumn(
-                        "batch", FF.lit(batch_id).cast("bigint")
-                    )
-                    .write.mode("overwrite")
-                    .partitionBy("batch")
-                    .parquet(f"{tmp}/pairs")
-                )
-            finally:
-                if old is not None:
-                    s.conf.set(
-                        "spark.sql.sources.partitionOverwriteMode", old
-                    )
-                else:
-                    # key was unset before: leaving it set to dynamic would
-                    # silently change later overwrite-partitionBy writes
-                    s.conf.unset(
-                        "spark.sql.sources.partitionOverwriteMode"
-                    )
 
         (
             stream.writeStream.foreachBatch(_proc)

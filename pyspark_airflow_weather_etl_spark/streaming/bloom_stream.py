@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.bloom import bloom_build
+from ..operators.lifecycle import _write_batch_keyed
 
 _run_ids = itertools.count()
 
@@ -49,27 +50,10 @@ def run_streaming_bloom(
     spark = streaming_session(spark)
 
     def process(batch: DataFrame, batch_id: int) -> None:
-        bs = batch.sparkSession
         words = bloom_build(key_fn(batch), "__key", m_bits, k).withColumn(
             "batch", F.lit(batch_id)
         )
-        old = bs.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-        bs.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            words.write.mode("overwrite").partitionBy("batch").parquet(
-                out_path
-            )
-        finally:
-            if old is not None:
-                bs.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", old
-                )
-            else:
-                # key was unset before: leaving it set to dynamic would
-                # silently change later overwrite-partitionBy writes
-                bs.conf.unset(
-                    "spark.sql.sources.partitionOverwriteMode"
-                )
+        _write_batch_keyed(words, out_path, ["batch"])
 
     name = f"bloom_words_{next(_run_ids)}"
     writer = (

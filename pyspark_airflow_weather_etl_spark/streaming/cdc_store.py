@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import cdc_chunks
+from ..operators.lifecycle import _write_batch_keyed
 
 CHUNKS_SCHEMA = "doc_id bigint, chunk_idx bigint, digest string, n_tokens bigint, batch bigint"
 
@@ -47,29 +48,11 @@ def run_streaming_cdc_store(
         if batch_df.isEmpty():
             return
         chunks = cdc_chunks(batch_df, id_col, text_col)
-        # conf on the CLONED session foreachBatch hands us (pitfall:
-        # the outer session's conf does not apply here)
-        s = chunks.sparkSession
-        old = s.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-        s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (
-                chunks.withColumn("batch", F.lit(batch_id).cast("bigint"))
-                .write.mode("overwrite")
-                .partitionBy("batch")
-                .parquet(out_path)
-            )
-        finally:
-            if old is not None:
-                s.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", old
-                )
-            else:
-                # key was unset before: leaving it set to dynamic would
-                # silently change later overwrite-partitionBy writes
-                s.conf.unset(
-                    "spark.sql.sources.partitionOverwriteMode"
-                )
+        _write_batch_keyed(
+            chunks.withColumn("batch", F.lit(batch_id).cast("bigint")),
+            out_path,
+            ["batch"],
+        )
 
     writer = stream.writeStream.foreachBatch(_append).trigger(
         availableNow=True

@@ -31,29 +31,9 @@ from ..operators.classifier import (
     pareto_flags,
     score_quality_classifier,
 )
+from ..operators.lifecycle import _write_batch_keyed
 
 _run_ids = itertools.count()
-
-
-def _append_batch_keyed(df: DataFrame, out_path: str, batch_id: int) -> None:
-    spark = df.sparkSession
-    old = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            df.withColumn("batch", F.lit(batch_id))
-            .write.mode("overwrite")
-            .partitionBy("batch")
-            .parquet(out_path)
-        )
-    finally:
-        if old is not None:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", old)
-        else:
-            # the key was unset before; leaving it set to dynamic would
-            # silently change later overwrite-partitionBy writes from
-            # full-tree replace to partial overwrite
-            spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
 
 
 def run_streaming_classify(
@@ -81,10 +61,12 @@ def run_streaming_classify(
 
     def process(batch: DataFrame, batch_id: int) -> None:
         scored = score_quality_classifier(batch, model, id_col, text_col)
-        _append_batch_keyed(
-            pareto_flags(scored, id_col, alpha=alpha),
+        _write_batch_keyed(
+            pareto_flags(scored, id_col, alpha=alpha).withColumn(
+                "batch", F.lit(batch_id)
+            ),
             out_path,
-            batch_id,
+            ["batch"],
         )
 
     name = f"classify_{next(_run_ids)}"

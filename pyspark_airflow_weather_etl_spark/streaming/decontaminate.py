@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.governance import ngram_phrases
+from ..operators.lifecycle import _write_batch_keyed
 
 _run_ids = itertools.count()
 
@@ -107,37 +108,17 @@ def run_streaming_decontaminate(
         keep = F.col("n_contaminated") * F.lit(
             int(max_frac_denom)
         ) <= F.lit(int(max_frac_numer)) * F.col("n_ngrams")
-        old = bs.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", None
+        _write_batch_keyed(
+            flagged.where(keep).withColumn("batch", F.lit(batch_id)),
+            out_path,
+            ["batch"],
         )
-        bs.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
+        (
+            flagged.where(~keep)
+            .select(id_col, "n_ngrams", "n_contaminated")
+            .write.mode("append")
+            .parquet(quarantine_path)
         )
-        try:
-            (
-                flagged.where(keep)
-                .withColumn("batch", F.lit(batch_id))
-                .write.mode("overwrite")
-                .partitionBy("batch")
-                .parquet(out_path)
-            )
-            (
-                flagged.where(~keep)
-                .select(id_col, "n_ngrams", "n_contaminated")
-                .write.mode("append")
-                .parquet(quarantine_path)
-            )
-        finally:
-            if old is not None:
-                bs.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", old
-                )
-            else:
-                # key was unset before: leaving it set to dynamic would
-                # silently change later overwrite-partitionBy writes
-                bs.conf.unset(
-                    "spark.sql.sources.partitionOverwriteMode"
-                )
 
     name = f"decontam_{next(_run_ids)}"
     writer = (

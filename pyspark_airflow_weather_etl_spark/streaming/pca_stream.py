@@ -23,6 +23,7 @@ import itertools
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.lifecycle import _write_batch_keyed
 from ..operators.pca import (
     moment_partials,
     moments_from_rows,
@@ -51,30 +52,13 @@ def run_streaming_pca_moments(
     spark = streaming_session(spark)
 
     def process(batch: DataFrame, batch_id: int) -> None:
-        bs = batch.sparkSession
         rows = (
             moment_partials(batch, vec_col, d)
             .groupBy("i", "j")
             .agg(F.sum("v").alias("v"))
             .withColumn("batch", F.lit(batch_id))
         )
-        old = bs.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-        bs.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            rows.write.mode("overwrite").partitionBy("batch").parquet(
-                out_path
-            )
-        finally:
-            if old is not None:
-                bs.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", old
-                )
-            else:
-                # key was unset before: leaving it set to dynamic would
-                # silently change later overwrite-partitionBy writes
-                bs.conf.unset(
-                    "spark.sql.sources.partitionOverwriteMode"
-                )
+        _write_batch_keyed(rows, out_path, ["batch"])
 
     name = f"pca_moments_{next(_run_ids)}"
     writer = (

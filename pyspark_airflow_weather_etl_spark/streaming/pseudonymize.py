@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.governance import pseudonymize, vault_extend
+from ..operators.lifecycle import _write_batch_keyed
 
 _run_ids = itertools.count()
 
@@ -58,30 +59,7 @@ def run_streaming_pseudonymize(
         out = pseudonymize(batch, vault, key_col).withColumn(
             "batch", F.lit(batch_id)
         )
-        old = bs.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", None
-        )
-        # the clone-session lesson (streaming/scd2.py): conf switches
-        # must target batch.sparkSession or a vanilla deployment keeps
-        # STATIC overwrite and truncates the store every batch
-        bs.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        )
-        try:
-            out.write.mode("overwrite").partitionBy("batch").parquet(
-                out_path
-            )
-        finally:
-            if old is not None:
-                bs.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", old
-                )
-            else:
-                # key was unset before: leaving it set to dynamic would
-                # silently change later overwrite-partitionBy writes
-                bs.conf.unset(
-                    "spark.sql.sources.partitionOverwriteMode"
-                )
+        _write_batch_keyed(out, out_path, ["batch"])
 
     name = f"pseudo_{next(_run_ids)}"
     writer = (

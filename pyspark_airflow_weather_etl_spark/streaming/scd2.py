@@ -69,59 +69,36 @@ def run_streaming_scd2(
     spark = streaming_session(spark)
 
     def process(batch: DataFrame, batch_id: int) -> None:
-        # foreachBatch runs on a CLONED session with isolated conf —
-        # the overwrite-mode switch MUST target batch.sparkSession,
-        # not the outer session, or a vanilla-session deployment keeps
-        # STATIC overwrite in the clone and every raw write truncates
-        # the store to the current batch (caught by the driver's
-        # vanilla-session contract run; the engine session masked it
-        # because its clones inherit dynamic as the session default)
+        # Both writes pass dynamic overwrite as a writer option: the
+        # foreachBatch clone's session conf is static on a vanilla
+        # session, and a static overwrite would truncate the store to
+        # the current batch.
         bs = batch.sparkSession
         keyed = _with_bucket(batch, key_col, n_buckets)
-        old = bs.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", None
+        (
+            keyed.withColumn("batch", F.lit(batch_id))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("kb", "batch")
+            .parquet(raw_path)
         )
-        bs.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
+        touched = sorted(
+            r.kb for r in keyed.select("kb").distinct().collect()
         )
-        try:
-            (
-                keyed.withColumn("batch", F.lit(batch_id))
-                .write.mode("overwrite")
-                .partitionBy("kb", "batch")
-                .parquet(raw_path)
-            )
-            touched = sorted(
-                r.kb for r in keyed.select("kb").distinct().collect()
-            )
-            # sealed ∪ unsealed-live view: identical to a plain read
-            # until sources.rawstore.seal_batches has run on raw_path,
-            # after which old batches come from the compacted sealed
-            # snapshot (still kb-partition-pruned) and replay garbage
-            # is ledger-excluded.
-            raw = read_raw_store(bs, raw_path).where(
-                F.col("kb").isin(touched)
-            )
-            hist = scd2_compact(
-                raw, key_col, state_col, ts_col, tiebreak_col
-            )
-            (
-                _with_bucket(hist, key_col, n_buckets)
-                .write.mode("overwrite")
-                .partitionBy("kb")
-                .parquet(history_path)
-            )
-        finally:
-            if old is not None:
-                bs.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", old
-                )
-            else:
-                # key was unset before: leaving it set to dynamic would
-                # silently change later overwrite-partitionBy writes
-                bs.conf.unset(
-                    "spark.sql.sources.partitionOverwriteMode"
-                )
+        # sealed ∪ unsealed-live view: identical to a plain read
+        # until sources.rawstore.seal_batches has run on raw_path,
+        # after which old batches come from the compacted sealed
+        # snapshot (still kb-partition-pruned) and replay garbage
+        # is ledger-excluded.
+        raw = read_raw_store(bs, raw_path).where(F.col("kb").isin(touched))
+        hist = scd2_compact(raw, key_col, state_col, ts_col, tiebreak_col)
+        (
+            _with_bucket(hist, key_col, n_buckets)
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("kb")
+            .parquet(history_path)
+        )
 
     name = f"scd2_{next(_run_ids)}"
     writer = (

@@ -80,9 +80,7 @@ SLOW_TESTS = {
     "test_oracle_parity.py::test_oracle_parity[bm25_prf_expanded_at_rest]",
     "test_oracle_parity.py::test_oracle_parity[semantic_dedup_incremental_cells]",
     "test_oracle_parity.py::test_oracle_parity[streaming_incremental_dedup]",
-    "test_oracle_parity.py::test_oracle_parity[streaming_scd2_sealed_store]",
     "test_oracle_parity.py::test_oracle_parity[streaming_semantic_dedup]",
-    "test_oracle_parity.py::test_oracle_parity[streaming_span_corruption]",
     "test_oracle_parity.py::test_rows_only_queries_run[ivfpq_ann_topk_incremental]",
     "test_oracle_parity.py::test_rows_only_queries_run[opq_ann_topk_incremental]",
     "test_oracle_parity.py::test_rows_only_queries_run[quality_classifier_scores]",

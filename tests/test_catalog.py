@@ -3,8 +3,20 @@ consistent as entries are added."""
 
 from __future__ import annotations
 
+import json
+import math
+from pathlib import Path
+
+import pandas as pd
+
 import __spark_entry__ as E
 from pyspark_airflow_weather_etl_spark.plans import REGISTRY
+from pyspark_airflow_weather_etl_spark.plans.registry import (
+    oracle_mismatches,
+    schedule,
+)
+
+REPO_ROOT = Path(__file__).resolve().parents[1]
 
 
 def test_every_entry_documented():
@@ -144,3 +156,82 @@ def test_rows_only_entries_are_the_documented_sketches():
         # tests/test_streaming.py
         "streaming_pca_project_embeddings",
     }, f"unexpected rows-only set: {rows_only}"
+
+
+GREEN = {"hash_match": True, "err": None}
+RED = {"hash_match": False, "err": None}
+NO_ORACLE = {"hash_match": None, "err": "no_oracle"}
+
+
+def _records(tmp_path, rounds: dict[int, dict[str, dict]]) -> Path:
+    for n, rows in rounds.items():
+        (tmp_path / f"CORRECTNESS_r{n:02d}.json").write_text(json.dumps(rows))
+    return tmp_path
+
+
+def test_schedule_puts_never_sampled_names_first(tmp_path):
+    d = _records(tmp_path, {1: {"a": GREEN, "c": NO_ORACLE}})
+    assert schedule(["a", "b", "c", "d"], d) == ["b", "d", "a", "c"]
+
+
+def test_schedule_puts_a_red_newest_row_in_the_head(tmp_path):
+    d = _records(
+        tmp_path,
+        {1: {"a": GREEN, "b": GREEN, "c": GREEN}, 2: {"a": GREEN, "c": RED}},
+    )
+    # c was green in r1 but red in r2: it joins the never-sampled d
+    assert schedule(["a", "b", "c", "d"], d) == ["c", "d", "b", "a"]
+
+
+def test_schedule_uses_the_newest_row(tmp_path):
+    d = _records(
+        tmp_path,
+        {2: {"a": GREEN, "b": RED}, 5: {"b": GREEN, "c": GREEN},
+         10: {"a": GREEN}},
+    )
+    # a sampled in r2 and r10 is scheduled as r10; b's red r2 row is
+    # superseded by its green r5 row
+    assert schedule(["a", "b", "c"], d) == ["b", "c", "a"]
+
+
+def test_schedule_sorts_rounds_by_number_not_file_name(tmp_path):
+    (tmp_path / "CORRECTNESS_r9.json").write_text(
+        json.dumps({"a": GREEN, "b": GREEN})
+    )
+    (tmp_path / "CORRECTNESS_r10.json").write_text(json.dumps({"a": RED}))
+    # by file name r10 sorts before r9 and a's newest row would be r9's
+    # green one; by round it is r10's red one
+    assert schedule(["b", "a"], tmp_path) == ["a", "b"]
+
+
+def test_schedule_without_records_keeps_registration_order(tmp_path):
+    assert schedule(["c", "a", "b"], tmp_path) == ["c", "a", "b"]
+
+
+def test_registry_sample_rotates_past_the_newest_record():
+    """The driver samples the first ~50 names; with the committed
+    records none of them may repeat the newest round's sample."""
+    records = sorted(
+        REPO_ROOT.glob("CORRECTNESS_r*.json"),
+        key=lambda p: int(p.stem.split("_r")[1]),
+    )
+    assert records
+    newest = json.loads(records[-1].read_text())
+    assert not set(list(E.queries())[:50]) & set(newest)
+
+
+def test_oracle_mismatches_rule():
+    want = pd.DataFrame({"b": [2.0, None], "a": [1, 3]})
+    # row order and column order do not matter
+    got = pd.DataFrame({"a": [3, 1], "b": [None, 2.0]})
+    assert oracle_mismatches(got, want) == []
+    # NaN equals None, and only None or NaN
+    nan = pd.DataFrame({"a": [1, 3], "b": [2.0, math.nan]})
+    assert oracle_mismatches(nan, want) == []
+    zero = pd.DataFrame({"a": [1, 3], "b": [2.0, 0.0]})
+    assert oracle_mismatches(zero, want)
+    # exact: no tolerance on floats
+    off = pd.DataFrame({"a": [1, 3], "b": [2.0 + 1e-12, None]})
+    assert len(oracle_mismatches(off, want)) == 1
+    assert oracle_mismatches(want[["a"]], want)
+    assert oracle_mismatches(want.iloc[:1], want)
