@@ -1252,28 +1252,19 @@ def _rawstore_pressure(spark, sf_dir: str) -> dict[str, float]:
         ).withColumn(
             "kb", F.pmod(F.hash("user_id"), F.lit(8)).cast("int")
         ).repartition("batch", "kb").persist()
-        old = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", None
-        )
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        )
-        try:
-            for store in ("plain", "sealed"):
-                # one write per batch id — the streaming accretion
-                # pattern (a single partitionBy write would produce
-                # one commit, which is not how the files arrive)
-                for b in range(n_batches):
-                    (
-                        staged.where(F.col("batch") == b)
-                        .write.mode("overwrite")
-                        .partitionBy("kb", "batch")
-                        .parquet(f"{tmp}/{store}")
-                    )
-        finally:
-            if old is not None:
-                spark.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", old
+        for store in ("plain", "sealed"):
+            # one write per batch id — the streaming accretion
+            # pattern (a single partitionBy write would produce one
+            # commit, which is not how the files arrive); dynamic
+            # overwrite is a writer option, so the session conf is
+            # never touched
+            for b in range(n_batches):
+                (
+                    staged.where(F.col("batch") == b)
+                    .write.mode("overwrite")
+                    .option("partitionOverwriteMode", "dynamic")
+                    .partitionBy("kb", "batch")
+                    .parquet(f"{tmp}/{store}")
                 )
         staged.unpersist()
         t0 = time.perf_counter()

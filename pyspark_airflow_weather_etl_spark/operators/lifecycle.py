@@ -27,11 +27,14 @@ slice only (:func:`fold_latest`).
 from __future__ import annotations
 
 import json
+from concurrent.futures import ThreadPoolExecutor
+from functools import partial
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, _parse_datatype_string
+from pyspark.util import inheritable_thread_target
 
 from ..sources.writers import publish_version
 
@@ -79,6 +82,33 @@ def _write_batch_keyed(df: DataFrame, out_path: str, partition_cols) -> None:
         .partitionBy(*partition_cols)
         .parquet(out_path)
     )
+
+
+def _concurrently(spark: SparkSession, *calls) -> list:
+    """Run each zero-argument call on a thread of its own, wait for
+    every one to return, then re-raise the first failure (in call
+    order) or return the results in call order.
+
+    The independent writes of one batch are each a few small Spark
+    jobs whose per-job overhead, not their tasks, dominates at fixture
+    scale; running them side by side fills the idle slots. Each call is
+    wrapped by its own ``inheritable_thread_target(spark)``, so the
+    jobs it starts carry the caller's job group, local properties and
+    session tags (``cancelJobGroup`` reaches every write), and each
+    thread gets its own copy of those properties: Spark SQL sets its
+    execution id in them, so one shared copy would mix up the
+    concurrent executions. Pass a frame's ``sparkSession`` where the
+    caller's ``spark`` may be a session-like wrapper:
+    ``inheritable_thread_target`` inherits tags only from a
+    :class:`SparkSession` itself. The pool lives for one call: no thread
+    outlives it, and a failed write still lets its siblings finish
+    before the error surfaces, so the caller's next step (the manifest)
+    never races a write."""
+    with ThreadPoolExecutor(max_workers=max(len(calls), 1)) as pool:
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(c)) for c in calls
+        ]
+    return [f.result() for f in futures]
 
 
 def _literal_frame(spark: SparkSession, rows, ddl: str) -> DataFrame:
@@ -211,9 +241,11 @@ def _drop_batch_dirs(
     away. Deleting the whole batch dir first makes a completed replay
     a true replacement (and covers the empty-re-delivery edge on
     single-level trees, where a zero-row write replaces nothing).
-    Ordering contract: callers drop the manifest row FIRST, then the
-    row dirs, then write rows, then the manifest — a crash anywhere
-    in that sequence leaves the batch missing from the manifest, so
+    Ordering contract (:func:`append_batch`): drop the manifest row
+    FIRST, then the row dirs, then write the trees (concurrently),
+    then the manifest once every tree write has returned — a crash or
+    a failed write anywhere in that sequence leaves the batch missing
+    from the manifest, so
     :func:`_batches_disjoint` returns False and every consumer runs
     its fold/dedup/guard. The honest width of the window (round-15
     review): a crash BETWEEN the deletes and the rows write leaves
@@ -250,25 +282,36 @@ def append_batch(
     path: str,
     batch_id: int,
     trees: dict,
-    manifest: tuple[str, DataFrame],
+    manifest: tuple,
 ) -> None:
     """Land one batch of a batch-keyed index, fail closed: drop the
     batch's ``manifest`` row, drop every listed tree's ``batch=<id>``
-    dir, write each tree, and write the manifest row LAST — a crash
-    anywhere leaves the batch missing from the manifest, so probes run
-    their fold/dedup/guard instead of trusting a stale range, and a
-    completed replay replaces the batch's previous delivery outright.
+    dir, write the trees concurrently (:func:`_concurrently`), and
+    write the manifest row LAST, once every tree write has returned —
+    a crash or a failed write anywhere leaves the batch missing from
+    the manifest, so probes run their fold/dedup/guard instead of
+    trusting a stale range, and a completed replay replaces the
+    batch's previous delivery outright.
 
     ``trees`` maps a subtree name to ``(frame, partition_cols)``, or
     to None for a tree this delivery only drops (a BM25 replay without
-    its ``docterms`` forward index). ``manifest`` is ``(name, frame)``
-    with the batch's one manifest row."""
+    its ``docterms`` forward index). ``manifest`` is ``(name, row)``:
+    ``row`` is the frame with the batch's one manifest row, or a
+    zero-argument function returning it, which then runs next to the
+    tree writes (the BM25/positional doc-id range is an aggregate over
+    the batch)."""
     name, row = manifest
     _drop_manifest_row(spark, f"{path}/{name}", batch_id)
     _drop_batch_dirs(spark, batch_id, *(f"{path}/{t}" for t in trees))
-    for t, spec in trees.items():
-        if spec is not None:
-            _write_batch_keyed(spec[0], f"{path}/{t}", spec[1])
+    writes = [
+        partial(_write_batch_keyed, spec[0], f"{path}/{t}", spec[1])
+        for t, spec in trees.items()
+        if spec is not None
+    ]
+    if callable(row):
+        row = _concurrently(spark, *writes, row)[-1]
+    else:
+        _concurrently(spark, *writes)
     _write_batch_keyed(row, f"{path}/{name}", ("batch",))
 
 
@@ -455,21 +498,27 @@ def compact_rows(
     deltas are never touched."""
     frozen = [t for t in _FROZEN if path_exists(spark, f"{src_path}/{t}")]
 
+    def copy(t: str, vdir: str) -> None:
+        spark.read.parquet(f"{src_path}/{t}").coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(f"{vdir}/{t}")
+
     def build(vdir: str) -> None:
-        for t in frozen:
-            spark.read.parquet(f"{src_path}/{t}").coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(f"{vdir}/{t}")
         rows = spark.read.parquet(f"{src_path}/rows")
         id_col = rows.columns[0]
         fold_keys = [id_col, *keys]
         cols = [c for c in rows.columns if c not in (*fold_keys, "batch")]
-        _write_batch_keyed(
-            fold_latest(rows, fold_keys, cols).withColumn(
-                "batch", F.lit(0).cast("bigint")
+        _concurrently(
+            rows.sparkSession,
+            *(partial(copy, t, vdir) for t in frozen),
+            partial(
+                _write_batch_keyed,
+                fold_latest(rows, fold_keys, cols).withColumn(
+                    "batch", F.lit(0).cast("bigint")
+                ),
+                f"{vdir}/rows",
+                partition_cols,
             ),
-            f"{vdir}/rows",
-            partition_cols,
         )
         folded = spark.read.parquet(f"{vdir}/rows")
         for k in keys:

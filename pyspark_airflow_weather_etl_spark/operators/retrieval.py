@@ -38,6 +38,7 @@ surface (hard-negative mining, eval-retrieval, corpus audit by query).
 from __future__ import annotations
 
 import hashlib
+from functools import partial
 
 from pyspark.sql import DataFrame, Row, SparkSession, Window
 from pyspark.sql import functions as F
@@ -48,6 +49,7 @@ from .dedup import spread_small_scan
 from .lifecycle import (
     _batch_ids,
     _batches_disjoint,
+    _concurrently,
     _literal_frame,
     _metadata_rows,
     _write_batch_keyed,
@@ -415,19 +417,21 @@ def bm25_index_append(
     )
     batch = F.lit(batch_id).cast("bigint")
     spark = docs.sparkSession
-    mm = _doc_range(tok)
-    # None on the first append / a pre-manifest tree
-    others = [
-        r
-        for r in _metadata_rows(spark, f"{path}/manifest", _DOC_MANIFEST)
-        or []
-        if int(r["batch"]) != int(batch_id) and int(r["n_docs"]) > 0
-    ]
-    maybe_overlap = mm["n_docs"] > 0 and any(
-        mm["min_doc_id"] <= int(r["max_doc_id"])
-        and int(r["min_doc_id"]) <= mm["max_doc_id"]
-        for r in others
-    )
+    seen = {}
+
+    def manifest() -> DataFrame:
+        # runs next to the tree writes; the other batches' rows are
+        # untouched by this batch's manifest-row drop
+        seen["mm"] = _doc_range(tok)
+        # None on the first append / a pre-manifest tree
+        seen["others"] = [
+            r
+            for r in _metadata_rows(spark, f"{path}/manifest", _DOC_MANIFEST)
+            or []
+            if int(r["batch"]) != int(batch_id) and int(r["n_docs"]) > 0
+        ]
+        return _doc_manifest(spark, batch_id, seen["mm"])
+
     append_batch(
         spark,
         path,
@@ -470,10 +474,16 @@ def bm25_index_append(
                 else None
             ),
         },
-        ("manifest", _doc_manifest(spark, batch_id, mm)),
+        ("manifest", manifest),
     )
     for c in caches:
         c.unpersist()
+    mm = seen["mm"]
+    maybe_overlap = mm["n_docs"] > 0 and any(
+        mm["min_doc_id"] <= int(r["max_doc_id"])
+        and int(r["min_doc_id"]) <= mm["max_doc_id"]
+        for r in seen["others"]
+    )
     return {
         "batch": int(batch_id),
         "n_docs": int(mm["n_docs"]),
@@ -741,7 +751,7 @@ def phrase_counts(
     # split(" ") never returns an empty array (an empty string
     # tokenizes to [""]), so every phrase has a leading token
     firsts = sorted({q.split(" ")[0] for _, q in phrases})
-    p = spark.createDataFrame(phrases, "phrase_id bigint, phrase string")
+    p = _literal_frame(spark, phrases, "phrase_id bigint, phrase string")
     p = p.select(
         "phrase_id",
         tokens("phrase").alias("p"),
@@ -831,7 +841,7 @@ def positional_index_append(
         path,
         batch_id,
         {"postings_pos": (posted, ("batch", "pfx"))},
-        ("manifest", _doc_manifest(spark, batch_id, _doc_range(t))),
+        ("manifest", lambda: _doc_manifest(spark, batch_id, _doc_range(t))),
     )
 
 
@@ -868,7 +878,10 @@ def positional_index_compact(
     to one task, so a leaf holds one file until it outgrows AQE's
     advisory partition size, then splits into files of about that
     size; probe results are bit-identical by construction (the catalog's
-    ``phrase_match_compacted`` shares the ad-hoc phrase oracle).
+    ``phrase_match_compacted`` shares the ad-hoc phrase oracle). The
+    postings write runs next to the source's doc-id range
+    (:func:`.lifecycle._concurrently`); the batch-0 manifest lands
+    after both.
 
     Crash contract is :func:`..sources.writers.publish_version`: the
     compacted tree builds inside an unreferenced ``v-<n>`` dir, the
@@ -881,30 +894,35 @@ def positional_index_compact(
             "token string, doc_id bigint, pos bigint, batch bigint,"
             " pfx string"
         ).parquet(f"{src_path}/postings_pos")
-        _write_batch_keyed(
-            src.select(
-                "token",
-                "doc_id",
-                "pos",
-                F.lit(0).cast("bigint").alias("batch"),
-                "pfx",
-            )
-            # cross-batch duplicate postings (a re-delivered document)
-            # MUST fold away here: the compacted tree is single-batch,
-            # which is exactly the shape the probes' duplicate-dedup
-            # skip trusts to be duplicate-free — and positions are
-            # per-document facts, so the distinct is semantics-
-            # restoring, paid once at compaction instead of per probe
-            .dropDuplicates(["token", "doc_id", "pos"]),
-            f"{vdir}/postings_pos",
-            ("batch", "pfx"),
+        _, mm = _concurrently(
+            src.sparkSession,
+            partial(
+                _write_batch_keyed,
+                src.select(
+                    "token",
+                    "doc_id",
+                    "pos",
+                    F.lit(0).cast("bigint").alias("batch"),
+                    "pfx",
+                )
+                # cross-batch duplicate postings (a re-delivered
+                # document) MUST fold away here: the compacted tree is
+                # single-batch, which is exactly the shape the probes'
+                # duplicate-dedup skip trusts to be duplicate-free —
+                # and positions are per-document facts, so the
+                # distinct is semantics-restoring, paid once at
+                # compaction instead of per probe
+                .dropDuplicates(["token", "doc_id", "pos"]),
+                f"{vdir}/postings_pos",
+                ("batch", "pfx"),
+            ),
+            lambda: _compacted_range(src),
         )
-        # fresh batch-0 manifest so appends AFTER this compaction can
-        # still prove disjointness against the folded history
+        # fresh batch-0 manifest, written once the postings are, so
+        # appends AFTER this compaction can still prove disjointness
+        # against the folded history
         _write_batch_keyed(
-            _doc_manifest(spark, 0, _compacted_range(src)),
-            f"{vdir}/manifest",
-            ("batch",),
+            _doc_manifest(spark, 0, mm), f"{vdir}/manifest", ("batch",)
         )
 
     return publish_version(spark, dst_path, build)
@@ -1127,11 +1145,11 @@ def phrase_match_at_rest(
     plens: dict[int, int] = {}
     for pid, _, _ in term_rows:
         plens[pid] = plens.get(pid, 0) + 1
-    terms_df = spark.createDataFrame(
-        term_rows, "phrase_id bigint, token string, off bigint"
+    terms_df = _literal_frame(
+        spark, term_rows, "phrase_id bigint, token string, off bigint"
     )
-    plen_df = spark.createDataFrame(
-        sorted(plens.items()), "phrase_id bigint, plen bigint"
+    plen_df = _literal_frame(
+        spark, sorted(plens.items()), "phrase_id bigint, plen bigint"
     )
     starts = (
         postings.join(F.broadcast(terms_df), "token")
@@ -1710,7 +1728,11 @@ def bm25_index_compact(
     task, so a leaf holds one file until it outgrows AQE's advisory
     partition size, then splits into files of about that size. Probe
     results are BIT-IDENTICAL by construction (sums of sums; the
-    catalog entry shares the ad-hoc oracle).
+    catalog entry shares the ad-hoc oracle). The trees write
+    concurrently (:func:`.lifecycle._concurrently`) next to the
+    batch-0 manifest's doc-id range, taken over the source postings,
+    and the manifest lands once every write has returned; only the
+    repair arm below writes its postings first and reads them back.
 
     Crash contract is :func:`..sources.writers.publish_version`: the
     compacted tree builds inside an unreferenced ``v-<n>`` dir, the
@@ -1763,53 +1785,55 @@ def bm25_index_compact(
     )
 
     def build(vdir: str) -> None:
-        raw = spark.read.schema(
+        postings_schema = (
             "token string, doc_id bigint, tf bigint, dl bigint,"
             " batch bigint, pfx string"
-        ).parquet(f"{src_path}/postings")
+        )
+        raw = spark.read.schema(postings_schema).parquet(
+            f"{src_path}/postings"
+        )
+        batch0 = F.lit(0).cast("bigint").alias("batch")
+        cols = ("token", "doc_id", "tf", "dl", batch0, "pfx")
+        if forward_index:
+            dterms = spark.read.schema(
+                "doc_id bigint, token string, batch bigint, dpfx string"
+            ).parquet(f"{src_path}/docterms")
+        trees = {}
         if do_repair:
             latest = raw.groupBy("doc_id").agg(
                 F.max("batch").alias("batch")
             )
-            kept = raw.join(latest, ["doc_id", "batch"])
-            postings = kept.select(
-                "token",
-                "doc_id",
-                "tf",
-                "dl",
-                F.lit(0).cast("bigint").alias("batch"),
-                "pfx",
+            _write_batch_keyed(
+                raw.join(latest, ["doc_id", "batch"]).select(*cols),
+                f"{vdir}/postings",
+                ("batch", "pfx"),
             )
-        else:
-            postings = raw.select(
-                "token",
-                "doc_id",
-                "tf",
-                "dl",
-                F.lit(0).cast("bigint").alias("batch"),
-                "pfx",
-            )
-        _write_batch_keyed(postings, f"{vdir}/postings", ("batch", "pfx"))
-        batch0 = F.lit(0).cast("bigint").alias("batch")
-        folded = spark.read.schema(
-            "token string, doc_id bigint, tf bigint, dl bigint,"
-            " batch bigint, pfx string"
-        ).parquet(f"{vdir}/postings")
-        if do_repair:
             # statistics recomputed from the FOLDED postings — the
             # additive deltas still contain the superseded docs
-            termstats = folded.groupBy("token").agg(
+            postings = spark.read.schema(postings_schema).parquet(
+                f"{vdir}/postings"
+            )
+            termstats = postings.groupBy("token").agg(
                 F.count(F.lit(1)).cast("bigint").alias("df")
             )
             stats = (
-                folded.groupBy("doc_id")
+                postings.groupBy("doc_id")
                 .agg(F.first("dl").alias("dl"))
                 .agg(
                     F.count(F.lit(1)).cast("bigint").alias("n_docs"),
                     F.sum("dl").cast("bigint").alias("sum_dl"),
                 )
             )
+            if forward_index:
+                dlatest = dterms.groupBy("doc_id").agg(
+                    F.max("batch").alias("batch")
+                )
+                dterms = dterms.join(dlatest, ["doc_id", "batch"])
         else:
+            # disjoint batches: the postings are the source rows under
+            # batch 0, written next to the summed statistics
+            postings = raw.select(*cols)
+            trees["postings"] = (postings, ("batch", "pfx"))
             termstats = (
                 spark.read.schema("token string, df bigint, batch bigint")
                 .parquet(f"{src_path}/termstats")
@@ -1826,32 +1850,25 @@ def bm25_index_compact(
                     F.sum("sum_dl").cast("bigint").alias("sum_dl"),
                 )
             )
-        _write_batch_keyed(
-            termstats.select("*", batch0), f"{vdir}/termstats", ("batch",)
-        )
-        _write_batch_keyed(
-            stats.select("*", batch0), f"{vdir}/stats", ("batch",)
-        )
+        trees["termstats"] = (termstats.select("*", batch0), ("batch",))
+        trees["stats"] = (stats.select("*", batch0), ("batch",))
         if forward_index:
-            dterms = spark.read.schema(
-                "doc_id bigint, token string, batch bigint, dpfx string"
-            ).parquet(f"{src_path}/docterms")
-            if do_repair:
-                dlatest = dterms.groupBy("doc_id").agg(
-                    F.max("batch").alias("batch")
-                )
-                dterms = dterms.join(dlatest, ["doc_id", "batch"])
-            _write_batch_keyed(
+            trees["docterms"] = (
                 dterms.select("doc_id", "token", batch0, "dpfx"),
-                f"{vdir}/docterms",
                 ("batch", "dpfx"),
             )
-        # fresh batch-0 manifest (from the written postings) so
+        *_, mm = _concurrently(
+            raw.sparkSession,
+            *(
+                partial(_write_batch_keyed, df, f"{vdir}/{t}", by)
+                for t, (df, by) in trees.items()
+            ),
+            lambda: _compacted_range(postings),
+        )
+        # fresh batch-0 manifest, written once every tree is, so
         # post-compaction appends keep the overlap protocol working
         _write_batch_keyed(
-            _doc_manifest(spark, 0, _compacted_range(folded)),
-            f"{vdir}/manifest",
-            ("batch",),
+            _doc_manifest(spark, 0, mm), f"{vdir}/manifest", ("batch",)
         )
 
     return publish_version(spark, dst_path, build)

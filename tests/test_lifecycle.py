@@ -6,10 +6,14 @@ exercised by the default selection."""
 
 from __future__ import annotations
 
+import threading
+import warnings
+
 import pytest
 from pyspark.sql import functions as F
 
 from pyspark_airflow_weather_etl_spark.operators.lifecycle import (
+    _batches_disjoint,
     _literal_frame,
     append_batch,
     compact_rows,
@@ -123,3 +127,87 @@ def test_frozen_meta_guards(spark, tmp_path):
     _append(spark, other, 0, [(1, "a0", 1.0)])
     with pytest.raises(ValueError, match="has rows but no meta"):
         check(other, 4)
+
+
+def _last_job_id(sc, group):
+    """Run one tiny job under ``group`` and return its id: job ids
+    grow by one per submitted job, so two such markers bracket every
+    job submitted between them."""
+    sc.setJobGroup(group, group)
+    try:
+        sc._jsc.sc().range(0, 1, 1, 1).count()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return max(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_concurrent_tree_writes_inherit_job_group(spark, tmp_path):
+    """Every job a three-tree append submits — from the writer threads
+    too — is in the caller's job group, so a tracer grouping jobs by
+    span and ``cancelJobGroup`` both reach every concurrent write."""
+    sc = spark.sparkContext
+    path = str(tmp_path / "idx")
+    df = _literal_frame(
+        spark, [(1, "a", 1.0), (2, "b", 2.0)], "id bigint, v string, d double"
+    )
+    keyed = df.withColumn("batch", F.lit(0).cast("bigint"))
+    st = df.agg(*id_range("id")).collect()[0]
+    first = _last_job_id(sc, "lifecycle-before")
+    sc.setJobGroup("lifecycle-append", "three-tree append")
+    try:
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            append_batch(
+                spark,
+                path,
+                0,
+                {t: (keyed, ("batch",)) for t in ("rows", "drift", "extra")},
+                rows_manifest(df, "id", 0, st),
+            )
+    finally:
+        sc._jsc.clearJobGroup()
+    last = _last_job_id(sc, "lifecycle-after")
+    assert not [w for w in caught if "session is not provided" in str(w.message)]
+    grouped = set(sc.statusTracker().getJobIdsForGroup("lifecycle-append"))
+    assert len(grouped) >= 4  # three trees and the manifest
+    assert grouped == set(range(first + 1, last))
+
+
+def test_failed_tree_write_leaves_no_manifest_row(spark, tmp_path):
+    """A tree whose frame fails at execution time fails the append:
+    the error surfaces, the replayed batch has no manifest row (so the
+    tree no longer proves its batches disjoint), and no writer thread
+    outlives the call."""
+    path = str(tmp_path / "idx")
+    _append(spark, path, 0, [(1, "a0", 1.0)])
+    _append(spark, path, 1, [(5, "b1", 1.0)])
+    assert _batches_disjoint(
+        spark, f"{path}/rows", f"{path}/rows_manifest", "min_id", "max_id",
+        "n_rows",
+    )
+    df = _literal_frame(spark, [(6, "c1", 1.0)], "id bigint, v string, d double")
+    keyed = df.withColumn("batch", F.lit(1).cast("bigint"))
+    bad = keyed.withColumn(
+        "v",
+        F.when(
+            F.col("id") > 0, F.raise_error(F.lit("tree write failed"))
+        ).otherwise(F.col("v")),
+    )
+    st = df.agg(*id_range("id")).collect()[0]
+    threads = threading.active_count()
+    with pytest.raises(Exception, match="tree write failed"):
+        append_batch(
+            spark,
+            path,
+            1,
+            {"rows": (keyed, ("batch",)), "bad": (bad, ("batch",))},
+            rows_manifest(df, "id", 1, st),
+        )
+    assert threading.active_count() == threads
+    man = spark.read.parquet(f"{path}/rows_manifest").collect()
+    assert [m["batch"] for m in man] == [0]
+    assert not _batches_disjoint(
+        spark, f"{path}/rows", f"{path}/rows_manifest", "min_id", "max_id",
+        "n_rows",
+    )

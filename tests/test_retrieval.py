@@ -701,6 +701,43 @@ def test_index_compaction_probe_identical_and_versioned(spark, docs, tmp_path):
     assert (1, 1000) in r2
 
 
+def test_bm25_compacted_manifest_is_range_of_written_postings(
+    spark, tmp_path
+):
+    """The disjoint (non-repair) compaction takes its batch-0 manifest
+    range from the source postings next to the tree writes; it must
+    equal the range over the postings it wrote. Zero-token documents
+    (NULL text) sit at both ends of the id range and have no postings,
+    so the range is not the union of the append manifests."""
+    from pyspark_airflow_weather_etl_spark.operators.retrieval import (
+        _compacted_range,
+        bm25_index_append,
+        bm25_index_compact,
+        bm25_index_current,
+    )
+
+    src = str(tmp_path / "src")
+    schema = "doc_id bigint, text string"
+    bm25_index_append(
+        spark.createDataFrame([(0, None), (1, "hash join")], schema), src, 0
+    )
+    r = bm25_index_append(
+        spark.createDataFrame([(5, "table scan"), (9, None)], schema), src, 1
+    )
+    assert r["maybe_overlap"] is False
+    bm25_index_compact(spark, src, str(tmp_path / "dst"))
+    live = bm25_index_current(spark, str(tmp_path / "dst"))
+    want = _compacted_range(spark.read.parquet(f"{live}/postings"))
+    man = [
+        (m["batch"], m["min_doc_id"], m["max_doc_id"], m["n_docs"])
+        for m in spark.read.parquet(f"{live}/manifest").collect()
+    ]
+    assert man == [
+        (0, want["min_doc_id"], want["max_doc_id"], want["n_docs"])
+    ]
+    assert man == [(0, 1, 5, 2)]
+
+
 def test_compacted_forward_index_serves_prf(spark, docs, tmp_path):
     """Compaction with forward_index=True keeps PRF servable from the
     published version, bit-identical to the delta-tree answer."""
